@@ -27,17 +27,15 @@ clears the SQL cache: several queries persist intermediates internally, and
 round-4's end-of-catalog measurements (q88 bench 7.4 s vs 4.2 s isolated)
 implicated accumulated cached partitions from the 87 prior queries.
 
+Each sample is also split at the ``spark_fn`` return: ``build_samples`` in
+BENCH_LOCAL.json carries the driver-side plan-construction seconds (py4j
+plus any job a query launches eagerly while building), the rest of the
+sample being the collect.
+
 Env:
     SPARK_GRAFT_SF_DIR      input dir (default /root/testdata/sf0.1)
     SPARK_GRAFT_CPUS        local cores (default 32)
     SPARK_GRAFT_REPEATS     catalog passes (default 3, min 1)
-    SPARK_GRAFT_CLEARCACHE  1 (default) = clear the SQL cache between
-                            queries — honest per-query cost; 0 = legacy
-                            r04 behavior where a query's persisted frames
-                            survive into later queries AND later passes
-                            (mins then reflect cache-hit reruns, not
-                            steady-state cost — kept only for
-                            round-over-round comparison)
 """
 
 from __future__ import annotations
@@ -51,12 +49,80 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from cosmo_spark.queries import timeseries as _ts
+from cosmo_spark.queries.trainprep import _ensure_pq_index, _pq_index_dir
+from cosmo_spark.sources import multimodal as _mm
+from cosmo_spark.sources.media_fps import ensure_media_fps, media_fp_store_dir
+
+
+def _pq(residual: bool) -> tuple:
+    return (lambda spark, sf_dir: str(_pq_index_dir(sf_dir, residual)),
+            lambda spark, sf_dir: _ensure_pq_index(spark, sf_dir, residual))
+
+
+def _media(codec: str, encode_fn) -> tuple:
+    return (lambda spark, sf_dir: media_fp_store_dir(spark, sf_dir, codec),
+            lambda spark, sf_dir: ensure_media_fps(
+                spark, sf_dir, codec, encode_fn, "vec_id"))
+
+
+def _log(dir_fn, build_fn) -> tuple:
+    return (lambda spark, sf_dir: dir_fn(sf_dir), build_fn)
+
+
+#: The at-rest setup artifacts, in build order: (tag, dir_fn, build_fn),
+#: both callables taking (spark, sf_dir).  Each is rebuilt from scratch per
+#: bench run and its build charged to setup_sec, so the query passes
+#: measure the steady-state read.  Run resolve_vector_artifacts first: on a
+#: non-literal corpus the pq_index dir name folds the TRAINED artifact hash
+#: (review r8).
+SETUP_ARTIFACTS: tuple[tuple, ...] = (
+    # production IVF-PQ builds its index ONCE and queries it forever
+    # (round-5 verdict #3), so q88/q90 repeats never pay the encode
+    ("pq_index_raw", *_pq(False)),
+    ("pq_index_res", *_pq(True)),
+    # media fingerprint stores (round-9 #4): fingerprinted once at ingest;
+    # q140–q142/q145 measure the store-backed path
+    ("media_fps_ppm", *_media("ppm", _mm.encode_pgm_gray8x8)),
+    ("media_fps_wav", *_media("wav", _mm.encode_wav_pcm8)),
+    ("media_fps_y4m", *_media("y4m", _mm.encode_y4m_gray8x8)),
+    # windowed register logs (round-9 #5), built once by the streaming
+    # maintainers; q146 and kin measure the horizon READ
+    ("hdr_window_log", *_log(_ts._hdr_window_log_dir, _ts.ensure_hdr_window_log)),
+    ("hll_window_log", *_log(_ts._hll_window_log_dir, _ts.ensure_hll_window_log)),
+    ("cms_window_log", *_log(_ts._cms_window_log_dir, _ts.ensure_cms_window_log)),
+    ("kmv_window_log", *_log(_ts._kmv_window_log_dir, _ts.ensure_kmv_window_log)),
+    # quarantined HLL log (q161): ingest + early-eviction decree +
+    # quarantined stragglers are setup
+    ("hll_quarantine_log",
+     *_log(_ts._hllq_window_log_dir, _ts.ensure_hll_quarantine_log)),
+    # rebuilt-to-new-log recovery (q163): derives from the quarantine log,
+    # so it must come after that entry
+    ("hll_rebuilt_log",
+     *_log(_ts._hllq_rebuilt_log_dir, _ts.ensure_hll_rebuilt_log)),
+    # versioned purge table (q151): publish + purge
+    ("purge_demo", *_log(_ts._purge_demo_dir, _ts.ensure_purged_events)),
+    # partitioned store lifecycle (q157): merge + update + purge
+    ("purge_parts",
+     *_log(_ts._purge_parts_dir, _ts.ensure_partitioned_purge_demo)),
+)
+
+
+def _tree_sig(d: str) -> tuple:
+    """(path, mtime, size) of every file under ``d``: any rewrite of an
+    artifact changes it."""
+    sig = []
+    for root, _, files in sorted(os.walk(d)):
+        for f in sorted(files):
+            p = os.path.join(root, f)
+            sig.append((p, os.path.getmtime(p), os.path.getsize(p)))
+    return tuple(sig)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
-    clear_cache = os.environ.get("SPARK_GRAFT_CLEARCACHE", "1") != "0"
     # sf from the dir basename, tolerating a protocol tag suffix
     # ("/tmp/sf1d", the distinct-dups 10x twin) — float("1d") would throw
     import re as _re
@@ -86,109 +152,32 @@ def main() -> None:
     qs["q01_pricing_summary"].spark_fn(spark, sf_dir).collect()
 
     # setup (timed separately, reported as setup_sec — round-5 verdict #3):
-    # production IVF-PQ builds its index ONCE and queries it forever, so the
-    # at-rest index build is charged here, not to every q88/q90 repeat.
-    # Rebuilt from scratch each bench run (dirs deleted first) so setup_sec
-    # is the real build cost, never a stale-dir read check.
+    # every artifact's dir is deleted first so setup_sec is the real build
+    # cost, never a stale-dir read check
     import shutil
 
     from cosmo_spark.queries.artifacts import resolve_vector_artifacts
-    from cosmo_spark.queries.trainprep import _ensure_pq_index, _pq_index_dir
 
-    # resolve the quantizer artifacts BEFORE computing index dirs: on a
-    # non-literal corpus the dir name folds the TRAINED artifact hash, and
-    # an unresolved (literal-defaulted) _pq_index_dir here would rmtree
-    # the wrong directory — leaving a stale index that zeroes setup_sec
-    # on repeat runs (review r8)
-    resolve_vector_artifacts(spark, sf_dir)
+    resolve_vector_artifacts(spark, sf_dir)  # before any dir_fn: see SETUP_ARTIFACTS
 
     setup: dict[str, float] = {}
     setup_dirs: dict[str, str] = {}
-    for residual, tag in ((False, "pq_index_raw"), (True, "pq_index_res")):
-        shutil.rmtree(_pq_index_dir(sf_dir, residual), ignore_errors=True)
-        t0 = time.time()
-        _ensure_pq_index(spark, sf_dir, residual)
-        setup[tag] = round(time.time() - t0, 3)
-        setup_dirs[tag] = _pq_index_dir(sf_dir, residual)
-    # media fingerprint stores (round-9 #4): production fingerprints media
-    # once at ingest and queries the store forever, so the decode pass is
-    # setup; q140–q142/q145 then measure the steady-state store-backed path
-    from cosmo_spark.sources import multimodal as _mm
-    from cosmo_spark.sources.media_fps import ensure_media_fps, media_fp_store_dir
-
-    for codec, enc in (("ppm", _mm.encode_pgm_gray8x8),
-                       ("wav", _mm.encode_wav_pcm8),
-                       ("y4m", _mm.encode_y4m_gray8x8)):
-        shutil.rmtree(media_fp_store_dir(spark, sf_dir, codec),
-                      ignore_errors=True)
-        t0 = time.time()
-        d = ensure_media_fps(spark, sf_dir, codec, enc, "vec_id")
-        setup[f"media_fps_{codec}"] = round(time.time() - t0, 3)
-        setup_dirs[f"media_fps_{codec}"] = d
-    # windowed HDR register log (round-9 #5): built once by the streaming
-    # maintainer; q146 measures the horizon READ, not the maintainer
-    from cosmo_spark.queries.timeseries import (
-        _cms_window_log_dir,
-        _hdr_window_log_dir,
-        _hll_window_log_dir,
-        _hllq_rebuilt_log_dir,
-        _hllq_window_log_dir,
-        _kmv_window_log_dir,
-        _purge_demo_dir,
-        _purge_parts_dir,
-        ensure_cms_window_log,
-        ensure_hdr_window_log,
-        ensure_hll_quarantine_log,
-        ensure_hll_rebuilt_log,
-        ensure_hll_window_log,
-        ensure_kmv_window_log,
-        ensure_partitioned_purge_demo,
-        ensure_purged_events,
-    )
-
-    for tag, dir_fn, build in (
-        ("hdr_window_log", _hdr_window_log_dir, ensure_hdr_window_log),
-        ("hll_window_log", _hll_window_log_dir, ensure_hll_window_log),
-        ("cms_window_log", _cms_window_log_dir, ensure_cms_window_log),
-        ("kmv_window_log", _kmv_window_log_dir, ensure_kmv_window_log),
-        # quarantined HLL log (q161): ingest + early-eviction decree +
-        # quarantined stragglers are setup; the query measures the
-        # steady-state rebuild-from-quarantine READ
-        ("hll_quarantine_log", _hllq_window_log_dir,
-         ensure_hll_quarantine_log),
-        # rebuilt-to-new-log recovery (q163): the one-time rebuild_log
-        # materialization is setup; the query measures the steady-state
-        # windowed READ of the new log (must come after the quarantine
-        # log's entry — it derives from that artifact)
-        ("hll_rebuilt_log", _hllq_rebuilt_log_dir, ensure_hll_rebuilt_log),
-        # versioned purge table (q151): publish + purge is setup; the query
-        # measures the steady-state CDC audit read
-        ("purge_demo", _purge_demo_dir, ensure_purged_events),
-        # partitioned store lifecycle (q157): merge + update + purge is
-        # setup; the query measures the three-version CDC audit read
-        ("purge_parts", _purge_parts_dir, ensure_partitioned_purge_demo),
-    ):
-        shutil.rmtree(dir_fn(sf_dir), ignore_errors=True)
+    for tag, dir_fn, build in SETUP_ARTIFACTS:
+        d = dir_fn(spark, sf_dir)
+        shutil.rmtree(d, ignore_errors=True)
         t0 = time.time()
         build(spark, sf_dir)
         setup[tag] = round(time.time() - t0, 3)
-        setup_dirs[tag] = dir_fn(sf_dir)
+        setup_dirs[tag] = d
     spark.catalog.clearCache()
     # accounting guard (round-7 verdict #3): every at-rest artifact built in
     # setup must be strictly read-only during the query passes — a query
     # rebuilding one would smuggle setup cost into (or out of) per-query
     # minimums.  Snapshot each artifact tree now; verified after the passes.
-    def _tree_sig(d: str) -> tuple:
-        sig = []
-        for root, _, files in sorted(os.walk(d)):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                sig.append((p, os.path.getmtime(p), os.path.getsize(p)))
-        return tuple(sig)
-
     setup_sigs = {tag: _tree_sig(d) for tag, d in setup_dirs.items()}
 
     samples: dict[str, list[float]] = {name: [] for name in qs}
+    build_samples: dict[str, list[float]] = {name: [] for name in qs}
     pass_walls: list[float] = []
     t_all = time.time()
     for _ in range(repeats):
@@ -196,37 +185,33 @@ def main() -> None:
         for name, q in qs.items():
             t0 = time.time()
             df = q.spark_fn(spark, sf_dir)
+            t_built = time.time()
             # force full execution + materialization like the driver's collect
             df.collect()
             samples[name].append(time.time() - t0)
+            build_samples[name].append(t_built - t0)
             # hygiene between queries: drop any intermediates a query
             # persisted internally so later queries aren't measured under
             # the accumulated storage pressure of the whole catalog (and
             # later PASSES don't get cache-hit flattery from identical
             # logical plans persisting across passes)
-            if clear_cache:
-                spark.catalog.clearCache()
-                # checkpointed/persisted RDDs (q97's localCheckpoint passes,
-                # q79's verdict lifecycle) survive clearCache — unpersist them
-                # too so every query's min is the same cold regime (round-5
-                # verdict #4; measured: also relieves memory pressure on
-                # later queries)
-                # _jsc is private API (no public PySpark equivalent as of
-                # 4.x) — a PySpark bump must degrade to a VISIBLE warning,
-                # never silently un-fix the uniform-cold-regime discipline
-                try:
-                    jsc = spark.sparkContext._jsc
-                    for jrdd in jsc.getPersistentRDDs().values():
-                        jrdd.unpersist()
-                except Exception as exc:  # pragma: no cover - upgrade guard
-                    import sys as _sys
-
-                    print(
-                        f"WARNING: could not unpersist checkpointed RDDs "
-                        f"between queries ({exc!r}); timings may include "
-                        f"cross-query storage pressure",
-                        file=_sys.stderr,
-                    )
+            spark.catalog.clearCache()
+            # checkpointed/persisted RDDs (q97's localCheckpoint passes,
+            # q79's verdict lifecycle) survive clearCache — unpersist them
+            # too so every query's min is the same cold regime (round-5
+            # verdict #4).  _jsc is private API (no public PySpark
+            # equivalent as of 4.x) — a PySpark bump must degrade to a
+            # VISIBLE warning, never silently un-fix the discipline
+            try:
+                for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+                    jrdd.unpersist()
+            except Exception as exc:  # pragma: no cover - upgrade guard
+                print(
+                    f"WARNING: could not unpersist checkpointed RDDs "
+                    f"between queries ({exc!r}); timings may include "
+                    f"cross-query storage pressure",
+                    file=sys.stderr,
+                )
         pass_walls.append(time.time() - t_pass)
     wall = round(time.time() - t_all, 3)
 
@@ -259,6 +244,9 @@ def main() -> None:
         "queries": mins,
         "queries_median": medians,
         "samples": {k: [round(x, 3) for x in v] for k, v in samples.items()},
+        "build_samples": {
+            k: [round(x, 3) for x in v] for k, v in build_samples.items()
+        },
         "pass_walls": [round(x, 3) for x in pass_walls],
         "sum_of_mins": round(sum(mins.values()), 3),
         "setup_sec": setup,

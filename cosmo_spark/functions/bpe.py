@@ -418,11 +418,11 @@ def learned_token_costs_passes(words, rules):
     """The round-9 expression-chain form of :func:`learned_token_costs`
     (one :func:`spark_bpe_pass` + localCheckpoint per rule).  Kept as the
     independent implementation the equivalence unit compares
-    :func:`bpe_segment_words` against — and as the pure-SQL fallback for
-    an environment without Arrow.  The per-pass localCheckpoint is the
-    HOF-inlining barrier q97 documents (Catalyst's CollapseProject
-    otherwise inlines every pass's non-collapse-cheap nested lambdas
-    into the next; measured >100 s vs ~1 s at sf0.01)."""
+    :func:`bpe_segment_words` against; no runtime path calls it.  The
+    per-pass localCheckpoint is the HOF-inlining barrier q97 documents
+    (Catalyst's CollapseProject otherwise inlines every pass's
+    non-collapse-cheap nested lambdas into the next; measured >100 s vs
+    ~1 s at sf0.01)."""
     from pyspark.sql import functions as F
 
     cur = words.select("word").distinct().select(

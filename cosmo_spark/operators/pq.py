@@ -136,10 +136,10 @@ def pq_encode(
     # flops) lets codegen split them into compilable helper methods; min is
     # least() over the 16 cell columns and argmin a first-match CASE chain
     # (same lowest-code tie rule as array_position).  Measured at sf0.1:
-    # zero "Failed to compile", cold exec 7.4 s -> 1.5 s warm
-    # (tools/exp_codegen.py; the verdict's suggested chained-select array
-    # staging still failed to compile at group=4 AND group=2 — measured,
-    # not assumed).
+    # zero "Failed to compile", cold exec 7.4 s -> 1.5 s warm (the
+    # verdict's suggested chained-select array staging still failed to
+    # compile at group=4 AND group=2 — measured, not assumed).  Gated by
+    # tests/test_plans.py::test_pq_family_compiles_under_no_fallback.
     #
     # py4j discipline: every stage is ONE selectExpr over pre-built SQL
     # strings — 256 individual F.expr() cells cost 1.2 s of driver-side

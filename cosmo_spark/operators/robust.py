@@ -246,131 +246,6 @@ def grouped_median_distributed(
     )
 
 
-def grouped_median_weighted(
-    df: DataFrame, key: str, val: str, weight: str,
-    buckets: int = 4096, out_col: str = "median",
-) -> DataFrame:
-    """EXACT per-group median from a pre-aggregated DISTINCT-VALUE table:
-    one row per (key, val) with a positive integer ``weight`` = how many
-    facts carry that value.  Same bucketed rank selection as
-    grouped_median_distributed — middle rank(s) located in a cumulative
-    bucket table, degenerate buckets answer immediately, only a
-    non-degenerate hot bucket's rows see a (tiny, aggregated) window —
-    but every pass runs over the value table, not the facts (guide §2.3:
-    aggregate before you shuffle).  The caller pays ONE map-side-combined
-    groupBy(key, val) over the facts; everything here is
-    |distinct values|-sized.
-
-    Exactness: ranks are cumulative WEIGHTS, so selection lands on the
-    same order statistics as ranking the facts row-by-row; ties collapse
-    into one weighted row, which is why no tiebreak column is needed.
-    The only float arithmetic is the shared two-row average — and when
-    both middle ranks select the same value v, (v+v)/2 == v exactly.
-    Contract: ``val`` non-null and finite, ``weight`` >= 1.  Duplicate
-    (key, val) rows are tolerated (ADVICE r13: they previously made the
-    slow-path running-sum window rank-ambiguous): the hot-bucket pass
-    re-aggregates per distinct value before ranking — a map-side combine
-    over the few rows that land in a non-degenerate bucket, free for
-    callers honouring the one-row contract.
-
-    WHEN TO USE (r13 measurement): only when the distinct-value table is
-    genuinely much smaller than the facts.  q104 (5 huge groups, heavy
-    value ties) improved 2.10 -> 1.36 s at sf0.1; but rewriting
-    robust_outliers/q127 through this path REGRESSED (q102 6.5 -> 20.7 s)
-    because events.value is ~49k distinct of 100k facts there — the
-    groupBy(key, val) pre-pass cost more than it saved, so those callers
-    keep grouped_median_distributed."""
-    vals = df.select(
-        F.col(key).alias("__k"), F.col(val).alias("__v"),
-        F.col(weight).alias("__w"),
-    )
-    stats = vals.groupBy("__k").agg(
-        F.sum("__w").alias("__n"),
-        F.min("__v").alias("__lo"),
-        F.max("__v").alias("__hi"),
-    )
-    b_expr = F.when(
-        F.col("__hi") > F.col("__lo"),
-        F.least(
-            F.lit(buckets - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col("__v") - F.col("__lo"))
-                    / (F.col("__hi") - F.col("__lo")) * buckets
-                ).cast("int"),
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    bucketed = vals.join(F.broadcast(stats), "__k").select(
-        "__k", "__v", "__w", b_expr.alias("__b")
-    )
-    bt = bucketed.groupBy("__k", "__b").agg(
-        F.sum("__w").alias("__c"),
-        F.min("__v").alias("__bmin"),
-        F.max("__v").alias("__bmax"),
-    )
-    w_cum = (
-        Window.partitionBy("__k").orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = bt.withColumn("__cum", F.sum("__c").over(w_cum))
-    ranks = (
-        stats.select(
-            F.col("__k").alias("__rk"),
-            F.explode(
-                F.array_distinct(
-                    F.array(
-                        ((F.col("__n") + 1) / 2).cast("long"),
-                        (F.col("__n") / 2 + 1).cast("long"),
-                    )
-                )
-            ).alias("__r"),
-        )
-    )
-    targets = ranks.join(
-        cum,
-        (F.col("__rk") == F.col("__k"))
-        & (ranks["__r"] > F.col("__cum") - F.col("__c"))
-        & (ranks["__r"] <= F.col("__cum")),
-    ).select(
-        F.col("__rk").alias("__k"), "__r", "__b",
-        (F.col("__cum") - F.col("__c")).alias("__cum_prev"),
-        "__bmin", "__bmax",
-    )
-    fast = targets.filter(F.col("__bmin") == F.col("__bmax")).select(
-        "__k", "__r", F.col("__bmin").alias("__val")
-    )
-    slow_t = targets.filter(F.col("__bmin") != F.col("__bmax")).select(
-        "__k", "__r", "__b", "__cum_prev"
-    )
-    w_in = (
-        Window.partitionBy("__k", "__r").orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    slow = (
-        bucketed.join(F.broadcast(slow_t), ["__k", "__b"])
-        # collapse duplicate (key, val) rows before the running sum: with
-        # ties on __v the rowsBetween(-1) window is rank-ambiguous and the
-        # rank filter could match 0 or 2 rows (ADVICE r13) — one distinct
-        # value per row makes it exact; map-side combined, hot-bucket-sized
-        .groupBy("__k", "__r", "__cum_prev", "__v")
-        .agg(F.sum("__w").alias("__w"))
-        .withColumn("__before", F.coalesce(F.sum("__w").over(w_in), F.lit(0)))
-        .filter(
-            (F.col("__r") - F.col("__cum_prev") > F.col("__before"))
-            & (F.col("__r") - F.col("__cum_prev")
-               <= F.col("__before") + F.col("__w"))
-        )
-        .select("__k", "__r", F.col("__v").alias("__val"))
-    )
-    return (
-        fast.unionByName(slow)
-        .groupBy(F.col("__k").alias(key))
-        .agg((F.sum("__val") / F.count(F.lit(1))).alias(out_col))
-    )
-
-
 def grouped_less_cumsum(
     df: DataFrame, key: str | None, val: str, weight: str | None = None,
     buckets: int = 4096, out_col: str = "less",

@@ -273,15 +273,6 @@ def hdr_low_duck_sql(b: str) -> str:
     )
 
 
-def hdr_high_spark_sql(b: str) -> str:
-    """Inclusive upper value bound of a bucket (error-band checks)."""
-    return (
-        f"CASE WHEN {b} < 64 THEN {b} ELSE "
-        f"{hdr_low_spark_sql(b)} + shiftleft(1, cast(shiftright({b}, 6) - 6 "
-        f"as int)) - 1 END"
-    )
-
-
 def hdr_quantiles(
     counts: DataFrame, keys: list[str], quantiles=(50, 90, 99)
 ) -> DataFrame:

@@ -489,14 +489,12 @@ def q104_distributed_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed rank-selection IS the exact order statistic.
 
     r14 (verdict #5): the r13 distinct-value rewrite (pre-aggregate to a
-    weighted (event_type, value) table, grouped_median_weighted) was
-    settled by an interleaved quiet-window A/B (tools/ab_q104.py,
-    results recorded in OPTIMIZATION_r14.md): distributed min
-    1.31 s / weighted 1.41 s, distributed faster in 6 of 7 alternating
-    passes — the r13 "2.10 -> 1.36 s" claim was a noisy-window artifact
-    the driver's own bench already contradicted.  Reverted to the r12
-    distributed shape; grouped_median_weighted stays an operator (its
-    exactness gate keeps it honest) for genuinely tie-heavy callers."""
+    weighted (event_type, value) table, then rank by cumulative weights)
+    lost an interleaved quiet-window A/B, recorded in OPTIMIZATION_r14.md:
+    distributed min 1.31 s / weighted 1.41 s, distributed faster in 6 of
+    7 alternating passes — the r13 "2.10 -> 1.36 s" claim was a
+    noisy-window artifact the driver's own bench already contradicted.
+    Reverted to the r12 distributed shape."""
     from cosmo_spark.operators.robust import grouped_median_distributed
 
     e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())

@@ -149,13 +149,6 @@ def write_results_csv(df: DataFrame, path: str, single_file: bool = True) -> Non
     out.write.mode("overwrite").option("header", True).csv(path)
 
 
-def append_table(df: DataFrame, path: str) -> None:
-    """DataModel ingest sink: append new rows to the model's table
-    (ref: model.ingest(), docs/source/api.rst:101-125).  Keyed upserts go
-    through operators.merge instead."""
-    df.write.mode("append").parquet(path)
-
-
 def attach_prop_typ(df: DataFrame, ancillary: DataFrame) -> DataFrame:
     """Attach the PROP_TYP label from the ancillary CSV table by ROOTNAME
     (ref: cosmo/monitor_helpers.py:147-159 ``get_prop_typ`` — dedupe on

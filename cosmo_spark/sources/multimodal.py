@@ -16,7 +16,6 @@ schema, batching, partitioning, UDF signature — with no codec at all.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -56,16 +55,6 @@ FEATURE_VEC_SCHEMA = StructType([
     StructField("features", BinaryType(), True),    # None on corrupt/empty
     StructField("decode_status", StringType(), False),
 ])
-
-
-def _fake_decode(blob: bytes | None) -> tuple[int, str]:
-    """Deterministic stand-in for a real image decode: derives a stable
-    'feature' fingerprint from the blob bytes.  REPLACE with a real codec
-    (PIL/librosa/ffmpeg) on a cluster that has them installed."""
-    if not blob:
-        return 0, ""
-    digest = hashlib.sha256(blob).hexdigest()
-    return 64, digest[:16]
 
 
 def _pil_available() -> bool:

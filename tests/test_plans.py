@@ -414,8 +414,8 @@ def test_pq_family_compiles_under_no_fallback(spark, qs):
     family must fit Janino's 64 KB limit and actually COMPILE.  With
     spark.sql.codegen.fallback=false a failed whole-stage compile raises
     instead of silently executing interpreted — the exact defect the
-    scalar-cell encode rewrite fixed (tools/exp_codegen.py measured the
-    old array-staged encode failing here, 6.2 s -> 1.6 s after).
+    scalar-cell encode rewrite fixed (the old array-staged encode failed
+    here; 6.2 s -> 1.6 s after, COVERAGE.md round 6).
 
     Guard validity: .count() would prune the encode columns away, so each
     query is forced through a full .collect() of its real output."""

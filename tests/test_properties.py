@@ -685,85 +685,6 @@ def test_distributed_median_is_exact_order_statistic(spark, rows):
     rows=st.lists(
         st.tuples(
             st.sampled_from(["a", "b", "c"]),
-            st.one_of(st.integers(-50, 50).map(float),
-                      st.floats(-1e6, 1e6, allow_nan=False)),
-            st.integers(min_value=1, max_value=5),
-        ),
-        min_size=1, max_size=40,
-        unique_by=lambda t: (t[0], t[1]),
-    ),
-    buckets=st.sampled_from([2, 3, 4096]),
-)
-def test_weighted_median_is_exact_order_statistic(spark, rows, buckets):
-    """r13: grouped_median_weighted (rank selection by cumulative weights
-    over a distinct-value table) == statistics.median of the expanded
-    multiset, for any mix of discrete/continuous/negative values and
-    weights — including buckets=2 (every bucket hot, weighted slow
-    path).  This is the q102/q104/q127 machinery after the guide §2.3
-    aggregate-before-shuffle rewrite."""
-    import statistics
-
-    from cosmo_spark.operators.robust import grouped_median_weighted
-
-    df = spark.createDataFrame(rows, "g STRING, v DOUBLE, w INT")
-    got = {
-        r.g: r.median
-        for r in grouped_median_weighted(
-            df, "g", "v", "w", buckets=buckets
-        ).collect()
-    }
-    by_group: dict[str, list[float]] = {}
-    for g, v, w in rows:
-        by_group.setdefault(g, []).extend([float(v)] * w)
-    assert set(got) == set(by_group)
-    for g, vals in by_group.items():
-        assert got[g] == statistics.median(vals), (g, sorted(vals))
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b"]),
-            st.integers(-5, 5).map(float),   # few values -> many duplicates
-            st.integers(min_value=1, max_value=5),
-        ),
-        min_size=1, max_size=40,
-    ),
-    buckets=st.sampled_from([2, 3]),
-)
-def test_weighted_median_tolerates_duplicate_value_rows(spark, rows, buckets):
-    """ADVICE r13: duplicate (key, val) rows made the slow-path running-sum
-    window rank-ambiguous (rank filter matching 0 or 2 rows).  The
-    hot-bucket pass now re-aggregates per distinct value, so contract
-    violations degrade to correct results — pinned with NO unique_by and
-    tiny buckets (every bucket hot, slow path forced)."""
-    import statistics
-
-    from cosmo_spark.operators.robust import grouped_median_weighted
-
-    df = spark.createDataFrame(rows, "g STRING, v DOUBLE, w INT")
-    got = {
-        r.g: r.median
-        for r in grouped_median_weighted(
-            df, "g", "v", "w", buckets=buckets
-        ).collect()
-    }
-    by_group: dict[str, list[float]] = {}
-    for g, v, w in rows:
-        by_group.setdefault(g, []).extend([float(v)] * w)
-    assert set(got) == set(by_group)
-    for g, vals in by_group.items():
-        assert got[g] == statistics.median(vals), (g, sorted(vals))
-
-
-@settings(max_examples=20, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b", "c"]),
             st.integers(min_value=-50, max_value=50).map(float),
             st.integers(min_value=0, max_value=5),
         ),

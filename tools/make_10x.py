@@ -16,8 +16,13 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
+
+from cosmo_spark.sources.tables import TABLES
 
 #: table -> {column: per-copy shift}; absent tables copy once, unshifted
 SHIFTS: dict[str, dict[str, int]] = {
@@ -28,11 +33,6 @@ SHIFTS: dict[str, dict[str, int]] = {
     "documents": {"doc_id": 10_000_000},
     "embeddings": {"vec_id": 10_000_000},
 }
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 
 def main() -> None:

@@ -28,11 +28,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb
 
 from cosmo_spark.session import get_spark
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+from cosmo_spark.sources.tables import TABLES
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
