@@ -15,16 +15,11 @@ def describe_by(
     df: DataFrame,
     group_cols: Sequence[str],
     value_cols: Sequence[str],
-    approx: bool = False,
 ) -> DataFrame:
     """count/mean/std/min/25%/50%/75%/max per group per value column.
 
-    ``approx=True`` switches quartiles to ``percentile_approx`` — the right
-    choice at 100 TB (the reference uses them for plotting bands only, where
-    approximate is semantically fine); exact interpolated percentiles
-    otherwise (matches pandas/duckdb).
+    Quartiles are exact interpolated percentiles (matches pandas/duckdb).
     """
-    pct = F.percentile_approx if approx else F.percentile
     aggs = []
     for v in value_cols:
         c = F.col(v)
@@ -33,9 +28,9 @@ def describe_by(
             F.avg(c).alias(f"{v}_mean"),
             F.stddev_samp(c).alias(f"{v}_std"),
             F.min(c).alias(f"{v}_min"),
-            pct(c, 0.25).alias(f"{v}_25%"),
-            pct(c, 0.50).alias(f"{v}_50%"),
-            pct(c, 0.75).alias(f"{v}_75%"),
+            F.percentile(c, 0.25).alias(f"{v}_25%"),
+            F.percentile(c, 0.50).alias(f"{v}_50%"),
+            F.percentile(c, 0.75).alias(f"{v}_75%"),
             F.max(c).alias(f"{v}_max"),
         ]
     return df.groupBy(*group_cols).agg(*aggs)

@@ -44,27 +44,21 @@ def quantile_cuts(
     quantiles: tuple[float, ...] = (0.95, 0.99, 0.995),
     sigma_lines: tuple[float, ...] = (1.0, 2.0, 3.0),
     group_cols: tuple[str, ...] = (),
-    exact: bool = True,
 ) -> DataFrame:
     """Per-group quantile cuts + median/σ reference lines
     (ref: dark_monitors.py:402-420: med + kσ).
 
-    Exact ``percentile`` buffers every value per group — fine for
-    plot-band sized groups, wrong for 100 TB of raw rates.  ``exact=False``
-    switches to ``approx_percentile`` (t-digest accuracy 10⁻⁴), whose state
-    is bounded and map-side combinable; the consumers here are plot cut
-    lines, which tolerate it.
+    Exact ``percentile`` buffers every value per group — fine for the
+    plot-band sized groups the monitors cut.
     """
     v = F.col(value_col)
-    pct = F.percentile if exact else (
-        lambda c, q: F.approx_percentile(c, q, 10000)
-    )
     aggs: list[Column] = [
-        pct(v, q).alias(f"p{str(q).replace('0.', '')}") for q in quantiles
+        F.percentile(v, q).alias(f"p{str(q).replace('0.', '')}")
+        for q in quantiles
     ]
     aggs += [
         F.avg(v).alias("mean"),
-        pct(v, 0.5).alias("median"),
+        F.percentile(v, 0.5).alias("median"),
         F.stddev_samp(v).alias("std"),
     ]
     out = df.groupBy(*group_cols).agg(*aggs)

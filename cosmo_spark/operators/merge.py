@@ -371,9 +371,9 @@ def merge_into_path(
     the table root would partition-discover the ``v=N`` dirs).
 
     Full-rewrite merge is the no-transaction-log fallback for
-    unpartitioned tables; at scale use ``merge_into_partitioned``
-    (rewrites only affected partitions, in place) or a transactional
-    format's MERGE.
+    unpartitioned tables; at scale use
+    ``sources.versioned_parts.merge_into_partitioned_versioned``
+    (rewrites only affected partitions) or a transactional format's MERGE.
 
     Single-writer: the whole read → merge → publish runs under the
     table's leased merge lock; a concurrent merge raises
@@ -416,133 +416,6 @@ def merge_into_path(
         if retain_versions is not None:
             _vacuum_locked(path, doc, retain_versions, guard)
         return version
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: str | Sequence[str],
-    version_col: str,
-    partition_col: str,
-    *,
-    layout: str = "versioned",
-    retain_versions: int | None = 1,
-) -> int | None:
-    """Version-guarded merge into a partitioned table, touching ONLY
-    partitions that contain updated keys — the ONE partitioned-upsert
-    entry point (round-10 verdict #6: two coexisting writers were a
-    caller footgun).
-
-    ``layout="versioned"`` (default) routes through the partition-
-    granular snapshot store (sources/versioned_parts): same partition-
-    surgical write cost, but reads go through the manifest
-    (``sources.versioned_parts.read_partitioned``), untouched generations
-    are shared byte-identically across versions, and time travel / CDC /
-    the q157 purge audit work.  ``retain_versions=1`` keeps storage at
-    in-place cost (only the current manifest survives, refcount-safely);
-    pass a larger N or None to retain history.  Returns the published
-    version id.
-
-    ``layout="hive"`` is the explicit escape hatch for tables EXTERNAL
-    engines read by raw directory convention (``month=2024-01/`` dirs,
-    ``spark.read.parquet(path)``): in-place dynamic partition overwrite,
-    no history, returns None.  A table written one way cannot be merged
-    the other way by accident: the versioned path refuses an un-adopted
-    Hive directory (migrate once via
-    ``sources.versioned_parts.adopt_partitioned``) and the hive path
-    refuses a manifest-bearing store.
-
-    The 100 TB upsert path either way: a day of updates against a
-    years-deep table reads and rewrites a handful of partition
-    directories; everything else is untouched bytes.
-    Hive-branch mechanics: dynamic partition overwrite
-    (``partitionOverwriteMode=dynamic``) replaces exactly the partitions
-    present in the written frame.  Requires ``partition_col`` to be part of
-    every update row (the merge key's partition cannot change).
-
-    The affected-partition set never materializes on the driver: the
-    current-table read is restricted by a broadcast left-semi join on the
-    partition column, which dynamic partition pruning (DPP — enabled by
-    default via ``spark.sql.optimizer.dynamicPartitionPruning.enabled``;
-    without it the semi-join still bounds the merge input but the scan
-    lists every directory) turns into an executor-side skip of untouched
-    directories — O(1) driver cost at any partition count.
-
-    ``updates`` is persisted for the duration of the merge: it feeds three
-    consumers (the isEmpty probe, the affected-partition distinct, and the
-    merge itself), and an expensive update lineage must not recompute per
-    action.
-    """
-    from cosmo_spark.sources.files import fs_exists, fs_list_names
-
-    manifest = os.path.join(path, "_versions.json")
-    if layout == "versioned":
-        from cosmo_spark.sources.versioned_parts import (
-            merge_into_partitioned_versioned,
-        )
-
-        # every probe scheme-portable (Hadoop FS, not os.*): on an
-        # hdfs:///object-store table the local calls would raise
-        # FileNotFoundError (os.listdir) or silently miss the manifest,
-        # defeating the adopt-or-hive guard (r11 advice)
-        if (
-            not fs_exists(spark, manifest)
-            and fs_exists(spark, path)
-            and any(
-                e.startswith(f"{partition_col}=")
-                for e in fs_list_names(spark, path)
-            )
-        ):
-            raise ValueError(
-                f"{path} is a raw Hive-layout table with no version "
-                f"manifest: adopt it once via sources.versioned_parts."
-                f"adopt_partitioned, or pass layout='hive' to keep "
-                f"merging in place"
-            )
-        return merge_into_partitioned_versioned(
-            spark, path, updates, key_cols, version_col, partition_col,
-            retain_versions=retain_versions,
-        )
-    if layout != "hive":
-        raise ValueError(f"unknown layout {layout!r}: 'versioned' or 'hive'")
-    if fs_exists(spark, manifest):
-        raise ValueError(
-            f"{path} is a versioned partitioned store: merging it with "
-            f"layout='hive' would write outside the manifest and corrupt "
-            f"every snapshot — use the default layout='versioned'"
-        )
-    updates = updates.persist()
-    try:
-        if updates.isEmpty():  # bounded probe (limit 1), not an O(rows) action
-            return
-        from cosmo_spark.sources.files import fs_exists
-
-        # same single-writer lock as merge_into_path: two concurrent
-        # partition merges touching overlapping partitions would interleave
-        # read-and-overwrite and lose rows; per-table granularity because
-        # the affected-partition set is not known before reading updates
-        with _table_lock(spark, path) as guard:
-            if fs_exists(spark, path):
-                affected = updates.select(partition_col).distinct()
-                current = spark.read.parquet(path).join(
-                    F.broadcast(affected), partition_col, "left_semi"
-                )
-                merged = merge_versioned(current, updates, key_cols, version_col)
-            else:
-                merged = merge_versioned(None, updates, key_cols, version_col)
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                guard.verify()   # fencing: a broken lease aborts loudly
-                merged.write.mode("overwrite").partitionBy(partition_col) \
-                    .parquet(path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    finally:
-        updates.unpersist()
 
 
 def snapshot_diff(

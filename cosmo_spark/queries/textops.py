@@ -69,32 +69,22 @@ SELECT word, count(*) AS n, count(DISTINCT doc_id) AS n_docs
 FROM tok GROUP BY word HAVING count(*) >= 10
 """,
 )
-def q18_word_frequency(
-    spark: SparkSession, sf_dir: str, exact_distinct: bool = True
-) -> DataFrame:
+def q18_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zip-explode + group count — the reference's explode_df reshape
     (ref: cosmo/monitor_helpers.py:35-49) applied to token arrays.
 
     Scale: explode multiplies rows before the shuffle, but partial
     aggregation collapses per-partition word counts first.  The exact
     ``countDistinct`` forces a two-phase expand (one extra shuffle keyed on
-    (word, doc_id)); at 100 TB pass ``exact_distinct=False`` to use
-    HyperLogLog++ ``approx_count_distinct`` (rsd 5%), which rides the same
-    single shuffle as the plain counts — the n_docs consumer is a
-    frequency-threshold heuristic that tolerates it (SURVEY A12 note).
-    Default stays exact for bit-parity with the oracle.
+    (word, doc_id)), kept for bit-parity with the oracle.
     """
     d = _t(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("word"))
-    n_docs = (
-        F.countDistinct("doc_id") if exact_distinct
-        else F.approx_count_distinct("doc_id")
-    )
     return (
         words.groupBy("word")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            n_docs.alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
         )
         .filter(F.col("n") >= 10)
     )
@@ -3204,13 +3194,15 @@ def editdist_near_dup_pairs(docs: DataFrame) -> DataFrame:
     # r14 (guide §2.3 — shuffle fewer bytes): the candidate equi-join key
     # (lang, i, 13-14-char piece) is folded into ONE xxhash64 long BEFORE
     # the explode, so the window side ships 153 x 8 bytes per doc instead
-    # of 153 x ~30.  Exactness is find-then-verify's: any TRUE near-dup
-    # pair (ed <= maxd) has a real untouched chunk whose image appears in
-    # the other doc's windows (pigeonhole), so its hashes collide too and
-    # the pair is still generated; a 64-bit hash collision can only ADD a
-    # candidate, which banded levenshtein then rejects (dist = -1) — the
-    # verified output is bit-identical (A/B-asserted at sf0.1, 1.90 ->
-    # 1.39 s; parity green).
+    # of 153 x ~30 (A/B at sf0.1: 1.90 -> 1.39 s, parity green).
+    # Exactness is find-then-verify's: any TRUE near-dup pair (same lang,
+    # ed <= maxd) has a real untouched chunk whose image appears in the
+    # other doc's windows (pigeonhole), so its hashes collide too and the
+    # pair is still generated; a 64-bit hash collision can only ADD a
+    # candidate, and the verify join re-checks both oracle predicates on
+    # the real values — ``la = lb`` and banded levenshtein (dist = -1
+    # beyond maxd) — so a colliding candidate, even across languages,
+    # never reaches the output.
     chunk_arr = F.expr("array(" + ", ".join(
         f"xxhash64(lang, {i}, substring(pfx, {st}, {ln}))"
         for i, st, ln in _Q120_CHUNKS
@@ -3232,10 +3224,17 @@ def editdist_near_dup_pairs(docs: DataFrame) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    pa = d.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pa"))
-    pb = d.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pb"))
+    pa = d.select(
+        F.col("doc_id").alias("doc_a"), F.col("lang").alias("la"),
+        F.col("pfx").alias("pa"),
+    )
+    pb = d.select(
+        F.col("doc_id").alias("doc_b"), F.col("lang").alias("lb"),
+        F.col("pfx").alias("pb"),
+    )
     scored = (
         cand.join(pa, "doc_a").join(pb, "doc_b")
+        .filter(F.col("la") == F.col("lb"))
         .select(
             "doc_a", "doc_b",
             F.levenshtein("pa", "pb", _Q120_MAXD).alias("dist"),

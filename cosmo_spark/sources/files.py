@@ -174,21 +174,6 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def fs_list_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry names of ``path`` through the Hadoop FileSystem API —
-    the scheme-portable ``os.listdir`` (empty list when absent).  The
-    layout guards in operators/merge.py probe partition directories with
-    this instead of ``os.listdir`` so an hdfs:///object-store table gets
-    the intended adopt-or-hive ValueError, not a local FileNotFoundError
-    (r11 advice)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
-
-
 def fs_dir_bytes(spark: SparkSession, path: str) -> int:
     """Total byte size under ``path`` (0 when absent), scheme-portable.
     Used as the broadcast-threshold probe: the foreachBatch media keeper

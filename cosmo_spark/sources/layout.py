@@ -186,8 +186,8 @@ def compact_table(
     repartition is a round-robin exchange — the ONLY shuffle, carrying
     each byte once.  At 100 TB you compact per partition directory
     (compact only partitions whose file count exceeds a threshold), which
-    is this operation applied under ``merge_into_partitioned``'s dynamic
-    overwrite instead of the whole-table swap.
+    is this operation applied per partition generation of the versioned
+    partitioned store instead of the whole-table swap.
     """
     import math
 

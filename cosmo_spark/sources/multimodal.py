@@ -74,7 +74,7 @@ _DECODE_COUNTER = None
 
 def decode_media(
     media: DataFrame, codec: str | None = None, batch_limit: int = 256,
-    deterministic_fake: bool = False, emit_features: bool = False,
+    emit_features: bool = False,
 ) -> DataFrame:
     """Decode/feature-extract media blobs via Arrow-batched ``mapInPandas``.
 
@@ -111,8 +111,6 @@ def decode_media(
     materialize on the driver; repartition upstream by size so one task's
     batches fit executor memory (blobs dominate row width).
     """
-    if deterministic_fake:  # pre-round-6 spelling
-        codec = "fake"
     if codec not in ("ppm", "pil", "wav", "y4m", "fake"):
         raise ValueError(
             "decode_media requires an explicit codec= of 'ppm' (stdlib "

@@ -129,12 +129,6 @@ def _adopt_legacy_locked(table_path: str) -> dict:
     return doc
 
 
-def _alive(pid: int) -> bool:
-    from cosmo_spark.operators.merge import _pid_alive
-
-    return _pid_alive(pid)
-
-
 def _reap_orphans_locked(table_path: str, doc: dict, keep: str) -> None:
     """Remove crashed publishers' leftovers.  Caller holds the table lock.
 
@@ -149,6 +143,8 @@ def _reap_orphans_locked(table_path: str, doc: dict, keep: str) -> None:
       fails that publisher's final rename LOUDLY — never silent loss.
     - the fixed-name migration tmp is never reaped (it resumes instead).
     """
+    from cosmo_spark.operators.merge import _pid_alive
+
     known = {v["version"] for v in doc["versions"]}
     host = socket.gethostname()
     for entry in os.listdir(table_path):
@@ -162,7 +158,7 @@ def _reap_orphans_locked(table_path: str, doc: dict, keep: str) -> None:
                 age = time.time() - os.path.getmtime(p)
             except OSError:
                 continue
-            if (owner_here and not _alive(pid)) or age > _TMP_MAX_AGE_S:
+            if (owner_here and not _pid_alive(pid)) or age > _TMP_MAX_AGE_S:
                 shutil.rmtree(p, ignore_errors=True)
         elif entry.startswith("v="):
             try:

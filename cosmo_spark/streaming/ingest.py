@@ -23,6 +23,23 @@ from pyspark.sql.types import StructType
 from cosmo_spark.operators.merge import merge_into_path
 
 
+def start_catch_up(
+    stream: DataFrame, batch_fn, checkpoint_dir: str
+) -> StreamingQuery:
+    """Start ``stream`` through ``foreachBatch(batch_fn)`` for ONE catch-up
+    run: ``availableNow`` processes everything present at start (in as many
+    micro-batches as the source's rate limits need) and then stops — the
+    cron-style cadence of the reference (``cosmo --monthly``).  Every
+    maintainer in this package starts through here, so none leaves a query
+    running after its caller's ``awaitTermination`` returns."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_ingest_merge(
     spark: SparkSession,
     source_dir: str,
@@ -32,7 +49,6 @@ def stream_ingest_merge(
     version_col: str,
     checkpoint_dir: str,
     fmt: str = "json",
-    trigger_once: bool = True,
     retain_versions: int | None = 3,
 ) -> StreamingQuery:
     """File-source stream -> version-guarded MERGE into a parquet table.
@@ -41,9 +57,7 @@ def stream_ingest_merge(
     files exactly-once — re-running after a crash re-processes nothing.
     ST3 (late/updated data): each micro-batch merges with the version guard,
     so a newer VERSION supersedes and re-delivery is a no-op (idempotent).
-
-    ``trigger_once`` runs one catch-up micro-batch and stops — the cron-style
-    cadence of the reference (``cosmo --monthly``); pass False for continuous.
+    The query runs one catch-up pass and stops (``start_catch_up``).
     """
     stream = (
         spark.readStream.format(fmt)
@@ -55,20 +69,14 @@ def stream_ingest_merge(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         # every micro-batch publishes a snapshot version; retain_versions
         # bounds the history (default 3: current + enough to snapshot_diff
-        # the last merges) — a continuous ingest must not accumulate one
+        # the last merges) — a recurring ingest must not accumulate one
         # full-table copy per batch forever (r9 self-review #4)
         merge_into_path(
             batch_df.sparkSession, target_path, batch_df, key_cols,
             version_col, retain_versions=retain_versions,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, merge_batch, checkpoint_dir)
 
 
 def stream_ingest_dedup(
@@ -85,7 +93,6 @@ def stream_ingest_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     fmt: str = "json",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Streaming twin of q79: each micro-batch of incoming documents probes
     the stored corpus's MinHash LSH index, near-duplicates (Jaccard ≥
@@ -161,17 +168,11 @@ def stream_ingest_dedup(
             )
             sh_kept.write.mode("append").parquet(shingles_path)
         finally:
-            # a continuous stream runs this per trigger — unpersist
+            # a catch-up run calls this once per micro-batch — unpersist
             # everything, not just the batch frame, or dead cached shingle
             # tables accumulate in executor storage between GC cycles
             for frame in (batch_df, sh_new, kept):
                 if frame is not None:
                     frame.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, dedup_batch, checkpoint_dir)

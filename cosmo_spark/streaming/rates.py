@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cosmo_spark.streaming.ingest import start_catch_up
+
 
 def windowed_rates(
     events: DataFrame,
@@ -58,7 +60,6 @@ def stream_rollup_cascade(
     target_dir: str,
     checkpoint_dir: str,
     fmt: str = "json",
-    trigger_once: bool = True,
 ):
     """Incrementally-maintained minute→hour→day rollup cascade — the
     streaming twin of q78 (the continuous-aggregate / hypertable refresh):
@@ -74,8 +75,7 @@ def stream_rollup_cascade(
     hour buckets from the merged minute rows and the affected day buckets
     from the merged hour rows.  The untouched history is never read beyond
     the keyed anti-join; at 100 TB the three grain tables are partitioned
-    by day so the rewrite touches a handful of partition directories
-    (merge_into_partitioned's dynamic-overwrite shape).
+    by day so the rewrite touches a handful of partition directories.
 
     Late data needs no special case: a late event lands in its (old)
     minute bucket and the cascade re-derives that bucket's hour/day —
@@ -158,9 +158,4 @@ def stream_rollup_cascade(
         .option("maxFilesPerTrigger", 1000)
         .load(source_dir)
     )
-    writer = stream.writeStream.foreachBatch(refresh).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, refresh, checkpoint_dir)

@@ -28,6 +28,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cosmo_spark.streaming.ingest import start_catch_up
+
 REGISTER_SCHEMA = "key STRING, bucket BIGINT, rho INT"
 
 # --------------------------------------------------------------------------- #
@@ -265,7 +267,6 @@ def stream_hll_registers(
     text_col: str,
     register_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """Start a query appending each micro-batch's HLL registers for
     ``text_col`` distinct-counting per ``key_col`` to ``register_path``.
@@ -281,13 +282,7 @@ def stream_hll_registers(
         )
         regs.write.mode("append").parquet(register_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_hll_registers(spark: SparkSession, register_path: str) -> DataFrame:
@@ -343,7 +338,6 @@ def stream_cms_counters(
     text_col: str,
     counter_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """Maintain q108's Count-Min counters over a token stream.
 
@@ -374,13 +368,7 @@ def stream_cms_counters(
         )
         counters.write.mode("append").parquet(counter_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_cms_counters(spark: SparkSession, counter_path: str) -> DataFrame:
@@ -457,7 +445,6 @@ def stream_kmv_values(
     text_col: str,
     value_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """Maintain q110's KMV/theta sketches over a document stream: each
     micro-batch's per-key k smallest distinct token hashes APPEND to an
@@ -489,13 +476,7 @@ def stream_kmv_values(
         )
         kmv_k_smallest(hs, ["key"]).write.mode("append").parquet(value_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_kmv_values(spark: SparkSession, value_path: str) -> DataFrame:
@@ -530,7 +511,6 @@ def stream_hdr_buckets(
     value_col: str,
     bucket_path: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """Maintain q143's HDR-histogram quantile buckets over a stream:
     each micro-batch appends per-(key, bucket) counts — at most keys ×
@@ -564,13 +544,7 @@ def stream_hdr_buckets(
         )
         counts.write.mode("append").parquet(bucket_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_hdr_buckets(spark: SparkSession, bucket_path: str) -> DataFrame:
@@ -648,7 +622,6 @@ def stream_hll_registers_windowed(
     register_path: str,
     checkpoint_dir: str,
     bucket: str = "day",
-    trigger_once: bool = True,
 ):
     """Windowed twin of ``stream_hll_registers``: each micro-batch's
     registers land under their event-time bucket (``date_trunc(bucket,
@@ -669,13 +642,7 @@ def stream_hll_registers_windowed(
             regs.select("key", "win", "bucket", "rho"), register_path
         ).write.mode("append").parquet(register_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_hll_registers_windowed(
@@ -713,7 +680,6 @@ def stream_cms_counters_windowed(
     counter_path: str,
     checkpoint_dir: str,
     bucket: str = "day",
-    trigger_once: bool = True,
 ):
     """Windowed twin of ``stream_cms_counters`` (same batch_id dedupe
     contract, one counter generation per (batch, window))."""
@@ -738,13 +704,7 @@ def stream_cms_counters_windowed(
         _divert_late(counters, counter_path) \
             .write.mode("append").parquet(counter_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_cms_counters_windowed(
@@ -771,7 +731,6 @@ def stream_kmv_values_windowed(
     value_path: str,
     checkpoint_dir: str,
     bucket: str = "day",
-    trigger_once: bool = True,
     tokenize_values: bool = True,
 ):
     """Windowed twin of ``stream_kmv_values``: per-(key, window) k-smallest
@@ -808,13 +767,7 @@ def stream_kmv_values_windowed(
             value_path,
         ).write.mode("append").parquet(value_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_kmv_values_windowed(
@@ -841,7 +794,6 @@ def stream_hdr_buckets_windowed(
     bucket_path: str,
     checkpoint_dir: str,
     bucket: str = "day",
-    trigger_once: bool = True,
 ):
     """Windowed twin of ``stream_hdr_buckets`` — per-(key, window) HDR
     bucket counts, so 'p99 latency over the last 30 days' reads only the
@@ -872,13 +824,7 @@ def stream_hdr_buckets_windowed(
         _divert_late(counts, bucket_path) \
             .write.mode("append").parquet(bucket_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_catch_up(stream, upsert, checkpoint_dir)
 
 
 def read_hdr_buckets_windowed(

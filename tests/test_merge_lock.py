@@ -16,8 +16,11 @@ import pytest
 from cosmo_spark.operators.merge import (
     MergeContentionError,
     _table_lock,
-    merge_into_partitioned,
     merge_into_path,
+)
+from cosmo_spark.sources.versioned_parts import (
+    merge_into_partitioned_versioned,
+    read_partitioned,
 )
 
 
@@ -100,17 +103,17 @@ def test_partitioned_merge_honors_the_same_lock(spark, tmp_path):
         [("k1", 1, "2024-01", "a")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge_into_partitioned(spark, path, base, "k", "ver", "month")
+    merge_into_partitioned_versioned(spark, path, base, "k", "ver", "month")
     upd = spark.createDataFrame(
         [("k2", 1, "2024-01", "b")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
     with _table_lock(spark, path):
         with pytest.raises(MergeContentionError):
-            merge_into_partitioned(spark, path, upd, "k", "ver", "month")
-    merge_into_partitioned(spark, path, upd, "k", "ver", "month")
-    from cosmo_spark.sources.versioned_parts import read_partitioned
-
+            merge_into_partitioned_versioned(
+                spark, path, upd, "k", "ver", "month"
+            )
+    merge_into_partitioned_versioned(spark, path, upd, "k", "ver", "month")
     assert {r.k for r in read_partitioned(spark, path).collect()} == {"k1", "k2"}
 
 

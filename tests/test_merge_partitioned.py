@@ -1,9 +1,7 @@
-"""Partition-pruned merge through the ONE entry point
-(operators/merge.merge_into_partitioned): only affected partitions are
-rewritten, in BOTH layouts — the default versioned store (manifest
-reads, retain_versions=1) and the layout='hive' escape hatch for
-external directory-convention readers.  Layout-mismatch footguns fail
-loud."""
+"""Partition-pruned merge into the versioned partitioned store
+(sources/versioned_parts.merge_into_partitioned_versioned): only affected
+partitions are rewritten, untouched generations are shared across
+versions, and a raw Hive-layout directory is refused loudly."""
 
 from __future__ import annotations
 
@@ -12,46 +10,38 @@ import os
 
 import pytest
 
-from cosmo_spark.operators.merge import merge_into_partitioned
-from cosmo_spark.sources.versioned_parts import read_partitioned
+from cosmo_spark.sources.versioned_parts import (
+    merge_into_partitioned_versioned,
+    read_partitioned,
+)
 
 
-def part_files(path, part, layout):
+def part_files(path, part):
     """{filename: mtime} for partition ``part``'s CURRENT data files —
-    the hive directory, or the manifest-current generation dir."""
-    if layout == "hive":
-        d = os.path.join(path, f"month={part}")
-    else:
-        doc = json.load(open(os.path.join(path, "_versions.json")))
-        cur = [v for v in doc["versions"] if v["version"] == doc["current"]][0]
-        d = os.path.join(path, cur["parts"][part])
+    the manifest-current generation dir."""
+    doc = json.load(open(os.path.join(path, "_versions.json")))
+    cur = [v for v in doc["versions"] if v["version"] == doc["current"]][0]
+    d = os.path.join(path, cur["parts"][part])
     return {f: os.path.getmtime(os.path.join(d, f))
             for f in os.listdir(d) if f.endswith(".parquet")}
 
 
-def read_table(spark, path, layout):
-    if layout == "hive":
-        return spark.read.parquet(path)
-    return read_partitioned(spark, path)
-
-
-def merge(spark, path, df, layout):
-    return merge_into_partitioned(
-        spark, path, df, "k", "ver", "month", layout=layout
+def merge(spark, path, df, retain_versions=1):
+    return merge_into_partitioned_versioned(
+        spark, path, df, "k", "ver", "month", retain_versions=retain_versions
     )
 
 
-@pytest.mark.parametrize("layout", ["versioned", "hive"])
-def test_merge_touches_only_affected_partitions(spark, tmp_path, layout):
+def test_merge_touches_only_affected_partitions(spark, tmp_path):
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [("k1", 1, "2024-01", "a"), ("k2", 1, "2024-01", "b"),
          ("k3", 1, "2024-02", "c"), ("k4", 1, "2024-02", "d")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge(spark, path, base, layout)
-    before_jan = part_files(path, "2024-01", layout)
-    before_feb = part_files(path, "2024-02", layout)
+    merge(spark, path, base)
+    before_jan = part_files(path, "2024-01")
+    before_feb = part_files(path, "2024-02")
 
     updates = spark.createDataFrame(
         [("k1", 2, "2024-01", "a2"),      # supersedes
@@ -59,10 +49,10 @@ def test_merge_touches_only_affected_partitions(spark, tmp_path, layout):
          ("k1", 0, "2024-01", "stale")],  # loses to ver 2 in same batch
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge(spark, path, updates, layout)
+    merge(spark, path, updates)
 
     state = {r.k: (r.ver, r.payload, r.month)
-             for r in read_table(spark, path, layout).collect()}
+             for r in read_partitioned(spark, path).collect()}
     assert state == {
         "k1": (2, "a2", "2024-01"),
         "k2": (1, "b", "2024-01"),
@@ -70,64 +60,60 @@ def test_merge_touches_only_affected_partitions(spark, tmp_path, layout):
         "k4": (1, "d", "2024-02"),
         "k9": (1, "new", "2024-01"),
     }
-    # February partition: identical files, untouched mtimes (versioned:
-    # the generation dir is SHARED with the previous version, not copied)
-    assert part_files(path, "2024-02", layout) == before_feb
+    # February partition: identical files, untouched mtimes (the
+    # generation dir is SHARED with the previous version, not copied)
+    assert part_files(path, "2024-02") == before_feb
     # January partition was rewritten
-    assert part_files(path, "2024-01", layout) != before_jan
+    assert part_files(path, "2024-01") != before_jan
 
 
-@pytest.mark.parametrize("layout", ["versioned", "hive"])
-def test_merge_empty_updates_noop(spark, tmp_path, layout):
+def test_merge_empty_updates_noop(spark, tmp_path):
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [("k1", 1, "2024-01", "a")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge(spark, path, base, layout)
-    snapshot = part_files(path, "2024-01", layout)
+    merge(spark, path, base)
+    snapshot = part_files(path, "2024-01")
     empty = base.limit(0)
-    merge(spark, path, empty, layout)
-    assert part_files(path, "2024-01", layout) == snapshot
+    merge(spark, path, empty)
+    assert part_files(path, "2024-01") == snapshot
 
 
-@pytest.mark.parametrize("layout", ["versioned", "hive"])
-def test_merge_many_partitions_rewrites_one(spark, tmp_path, layout):
+def test_merge_many_partitions_rewrites_one(spark, tmp_path):
     """Pruning at a higher partition count: 40 monthly partitions, one
-    update month — only that partition's files change.  Versioned: the
-    39 untouched generation dirs carry over into the new manifest
-    version untouched; hive: the semi-join path, no partition-value list
-    on the driver."""
+    update month — only that partition's files change: the 39 untouched
+    generation dirs carry over into the new manifest version."""
     path = str(tmp_path / "tbl40")
     base = spark.createDataFrame(
         [(f"k{i}", 1, f"2020-{(i % 40) + 1:02d}", "x") for i in range(200)],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge(spark, path, base, layout)
+    merge(spark, path, base)
     months = sorted({r.month for r in base.collect()})
-    snapshots = {m: part_files(path, m, layout) for m in months}
+    snapshots = {m: part_files(path, m) for m in months}
 
     updates = spark.createDataFrame(
         [("k7", 2, "2020-08", "upd")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge(spark, path, updates, layout)
+    merge(spark, path, updates)
 
     for m, snap in snapshots.items():
         if m == "2020-08":
-            assert part_files(path, m, layout) != snap
+            assert part_files(path, m) != snap
         else:
-            assert part_files(path, m, layout) == snap
+            assert part_files(path, m) == snap
     row = {r.k: r.ver
-           for r in read_table(spark, path, layout)
+           for r in read_partitioned(spark, path)
            .filter("month = '2020-08'").collect()}
     assert row["k7"] == 2
 
 
 def test_default_layout_retains_single_version(spark, tmp_path):
-    """The default (retain_versions=1) keeps storage at in-place cost:
-    after a second merge only the current version survives, and its
-    shared generations are intact."""
+    """retain_versions=1 keeps storage at in-place cost: after a second
+    merge only the current version survives, and its shared generations
+    are intact."""
     from cosmo_spark.sources.versioned_parts import partitioned_versions
 
     path = str(tmp_path / "tbl")
@@ -135,22 +121,20 @@ def test_default_layout_retains_single_version(spark, tmp_path):
         [("k1", 1, "2024-01", "a"), ("k3", 1, "2024-02", "c")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    v1 = merge_into_partitioned(spark, path, base, "k", "ver", "month")
+    v1 = merge(spark, path, base)
     upd = spark.createDataFrame(
         [("k1", 2, "2024-01", "a2")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    v2 = merge_into_partitioned(spark, path, upd, "k", "ver", "month")
+    v2 = merge(spark, path, upd)
     assert (v1, v2) == (1, 2)
     assert partitioned_versions(path) == [2]
     state = {r.k: r.ver for r in read_partitioned(spark, path).collect()}
     assert state == {"k1": 2, "k3": 1}
     # history on demand: retain_versions=None keeps both
     path2 = str(tmp_path / "tbl_hist")
-    merge_into_partitioned(spark, path2, base, "k", "ver", "month",
-                           retain_versions=None)
-    merge_into_partitioned(spark, path2, upd, "k", "ver", "month",
-                           retain_versions=None)
+    merge(spark, path2, base, retain_versions=None)
+    merge(spark, path2, upd, retain_versions=None)
     assert partitioned_versions(path2) == [1, 2]
     old = {r.k: r.ver
            for r in read_partitioned(spark, path2, version=1).collect()}
@@ -158,46 +142,18 @@ def test_default_layout_retains_single_version(spark, tmp_path):
 
 
 def test_layout_mismatch_fails_loud(spark, tmp_path):
-    """A table written one way cannot be merged the other way by
-    accident (the round-10 two-writers footgun)."""
+    """A raw Hive-layout directory (``month=...`` dirs, no version
+    manifest) is an external table: merging into it raises instead of
+    publishing a manifest that silently shadows its data, and leaves the
+    directory as it was."""
     df = spark.createDataFrame(
         [("k1", 1, "2024-01", "a")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
     hive = str(tmp_path / "hive_tbl")
-    merge_into_partitioned(spark, hive, df, "k", "ver", "month",
-                           layout="hive")
-    with pytest.raises(ValueError, match="adopt_partitioned"):
-        merge_into_partitioned(spark, hive, df, "k", "ver", "month")
-
-    vers = str(tmp_path / "vers_tbl")
-    merge_into_partitioned(spark, vers, df, "k", "ver", "month")
-    with pytest.raises(ValueError, match="versioned partitioned store"):
-        merge_into_partitioned(spark, vers, df, "k", "ver", "month",
-                               layout="hive")
-    with pytest.raises(ValueError, match="unknown layout"):
-        merge_into_partitioned(spark, vers, df, "k", "ver", "month",
-                               layout="delta")
-
-
-def test_adopting_hive_table_unblocks_versioned_merges(spark, tmp_path):
-    """The one-time migration the mismatch error points at: adopt, then
-    the default path merges and the full pre-adoption state is v1."""
-    from cosmo_spark.sources.versioned_parts import adopt_partitioned
-
-    path = str(tmp_path / "migrate")
-    base = spark.createDataFrame(
-        [("k1", 1, "2024-01", "a"), ("k3", 1, "2024-02", "c")],
-        "k STRING, ver INT, month STRING, payload STRING",
-    )
-    merge_into_partitioned(spark, path, base, "k", "ver", "month",
-                           layout="hive")
-    store = str(tmp_path / "migrate_store")
-    adopt_partitioned(spark, store, path, "month")
-    upd = spark.createDataFrame(
-        [("k1", 2, "2024-01", "a2")],
-        "k STRING, ver INT, month STRING, payload STRING",
-    )
-    merge_into_partitioned(spark, store, upd, "k", "ver", "month")
-    state = {r.k: r.ver for r in read_partitioned(spark, store).collect()}
-    assert state == {"k1": 2, "k3": 1}
+    df.write.partitionBy("month").parquet(hive)
+    before = sorted(os.listdir(hive))
+    with pytest.raises(ValueError, match="raw Hive-layout"):
+        merge(spark, hive, df)
+    assert sorted(os.listdir(hive)) == before
+    assert not os.path.exists(os.path.join(hive, "_versions.json"))

@@ -133,8 +133,8 @@ def test_decode_fake_is_deterministic(media):
     a = {r.media_id: (r.feat_dim, r.feat_hash, r.decode_status)
          for r in decode_media(media, codec="fake").collect()}
     b = {r.media_id: (r.feat_dim, r.feat_hash, r.decode_status)
-         for r in decode_media(media, deterministic_fake=True).collect()}
-    assert a == b  # legacy spelling maps to codec='fake'
+         for r in decode_media(media, codec="fake").collect()}
+    assert a == b  # two independent runs: content-derived, not random
     assert a["m1"][0] == 64 and a["m1"][2] == "ok"
     assert a["m2"] == (0, "", "empty")   # null blob handled in-batch
 

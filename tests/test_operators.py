@@ -178,18 +178,6 @@ def test_windows_ops(spark):
     assert box[1].smoothed == pytest.approx(14.0 / 3)
 
 
-def test_quantile_cuts_approx_mode(spark):
-    """exact=False swaps in bounded-state approx_percentile; on a small
-    frame both modes agree to t-digest accuracy."""
-    from cosmo_spark.operators.histogram import quantile_cuts
-
-    df = spark.range(1000).selectExpr("CAST(id AS DOUBLE) AS v")
-    exact = quantile_cuts(df, "v").collect()[0]
-    approx = quantile_cuts(df, "v", exact=False).collect()[0]
-    assert abs(exact["p95"] - approx["p95"]) <= 1.0
-    assert abs(exact["median"] - approx["median"]) <= 1.0
-
-
 def test_srp_lsh_near_dups_identical_vectors(spark):
     """Identical vectors collide in every band; all C(n,2) pairs come back
     with cos_sim 1.0, deduped across bands."""

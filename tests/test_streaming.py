@@ -37,7 +37,7 @@ def test_stream_ingest_merge_versions(spark, tmp_path):
         {"SMSID": "s2", "VERSION": "a1", "payload": 2},
     ])
     q = stream_ingest_merge(spark, str(src), SCHEMA, target, "SMSID", "VERSION", ckpt)
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     state = {r.SMSID: (r.VERSION, r.payload) for r in read_current(spark, target).collect()}
     assert state == {"s1": ("b4", 1), "s2": ("a1", 2)}
 
@@ -48,13 +48,13 @@ def test_stream_ingest_merge_versions(spark, tmp_path):
         {"SMSID": "s3", "VERSION": "a1", "payload": 3},
     ])
     q = stream_ingest_merge(spark, str(src), SCHEMA, target, "SMSID", "VERSION", ckpt)
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     state = {r.SMSID: (r.VERSION, r.payload) for r in read_current(spark, target).collect()}
     assert state == {"s1": ("c2", 10), "s2": ("a1", 2), "s3": ("a1", 3)}
 
     # ST1: re-running with no new files re-processes nothing (checkpoint)
     q = stream_ingest_merge(spark, str(src), SCHEMA, target, "SMSID", "VERSION", ckpt)
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     state2 = {r.SMSID: (r.VERSION, r.payload) for r in read_current(spark, target).collect()}
     assert state2 == state
 
@@ -89,7 +89,7 @@ def test_windowed_rates_streaming(spark, tmp_path):
         rates.writeStream.format("memory").queryName("rates_test")
         .outputMode("complete").trigger(availableNow=True).start()
     )
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     rows = spark.sql("SELECT * FROM rates_test").collect()
     got = {(r.event_type, r.window_start.second): r.n for r in rows}
     assert got == {("click", 0): 2, ("view", 25): 1}
@@ -121,7 +121,7 @@ def test_session_window_streams(spark, tmp_path):
         sessions.writeStream.format("memory").queryName("sess_test")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM sess_test").collect()
     got = {(r.user_id, r.session_window.start.isoformat()): r.n_events for r in rows}
     # user 1's first session merged two events; the 02:00 event and user 2's
@@ -153,7 +153,7 @@ def test_stream_ingest_dedup_across_batches(spark, tmp_path):
         q = stream_ingest_dedup(
             spark, str(src), DOC_SCHEMA, corpus, index, ckpt
         )
-        q.awaitTermination(60)
+        assert q.awaitTermination(60)
 
     write_json(src / "b1.json", [
         {"doc_id": 1, "text": base},
@@ -205,7 +205,7 @@ def test_stream_rollup_cascade_incremental_equals_batch(spark, tmp_path):
         q = stream_rollup_cascade(
             spark, str(src), schema_ts, target, ckpt
         )
-        q.awaitTermination(60)
+        assert q.awaitTermination(60)
 
     # the stream needs a real timestamp column: declare ts as timestamp
     schema_ts = StructType([
@@ -315,7 +315,7 @@ def test_stream_index_upsert_equals_batch_build(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     streamed = spark.read.schema(
         "vec_id BIGINT, codes ARRAY<INT>, bucket INT"

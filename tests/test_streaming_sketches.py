@@ -31,7 +31,7 @@ def _run(spark, src, ckpt, regs):
     q = stream_hll_registers(
         stream, "source", "text", str(regs), str(ckpt)
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
 
 def test_stream_registers_equal_batch_recompute(spark, tmp_path):
@@ -135,7 +135,7 @@ def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
             str(src)
         )
         q = stream_cms_counters(stream, "text", str(ctr), str(ckpt))
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run()
     _write_batch(src, "b2.json", b2)
@@ -221,12 +221,14 @@ def test_stream_kmv_values_equal_batch_and_survive_compaction(spark, tmp_path):
     ]
     _write_batch(src, "b1.json", b1)
     stream = spark.readStream.schema("source STRING, text STRING").json(str(src))
-    stream_kmv_values(stream, "source", "text", str(vals), str(ckpt)) \
-        .awaitTermination(120)
+    assert stream_kmv_values(
+        stream, "source", "text", str(vals), str(ckpt)
+    ).awaitTermination(120)
     _write_batch(src, "b2.json", b2)
     stream = spark.readStream.schema("source STRING, text STRING").json(str(src))
-    stream_kmv_values(stream, "source", "text", str(vals), str(ckpt)) \
-        .awaitTermination(120)
+    assert stream_kmv_values(
+        stream, "source", "text", str(vals), str(ckpt)
+    ).awaitTermination(120)
 
     all_docs = spark.createDataFrame(
         b1 + b2, "key STRING, text STRING"
@@ -338,8 +340,9 @@ def test_stream_hdr_buckets_equal_batch_and_quantile_band(spark, tmp_path):
         stream = spark.readStream.schema("source STRING, value DOUBLE").json(
             str(src)
         )
-        stream_hdr_buckets(stream, "source", "value", log, ckpt) \
-            .awaitTermination(120)
+        assert stream_hdr_buckets(
+            stream, "source", "value", log, ckpt
+        ).awaitTermination(120)
 
     write_batch("b1.json", b1)
     run()

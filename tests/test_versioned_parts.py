@@ -300,32 +300,3 @@ def test_crash_between_rename_and_manifest_preserves_old_version(
     assert _state(read_partitioned(spark, path))["k1"] == (2, "2024-01", "a2")
     for rel in orphans:
         assert not os.path.isdir(os.path.join(path, rel))
-
-
-def test_adopt_hive_layout_table(spark, tmp_path):
-    """Migration path from the in-place Hive-layout writer: adopt
-    rewrites through staging (files gain the in-file partition column),
-    publishes v1 identical row-for-row, and the adopted table then
-    merges/travels like a native one.  Double adoption fails loudly."""
-    from cosmo_spark.operators.merge import merge_into_partitioned
-    from cosmo_spark.sources.versioned_parts import adopt_partitioned
-
-    hive = str(tmp_path / "hive")
-    merge_into_partitioned(spark, hive, _base(spark), "k", "ver", "month",
-                           layout="hive")
-
-    path = str(tmp_path / "vp")
-    v1 = adopt_partitioned(spark, path, hive, "month")
-    assert v1 == 1
-    assert _state(read_partitioned(spark, path)) == _state(_base(spark))
-    assert partition_keys(path) == ["2024-01", "2024-02"]
-    # in-file partition column present (the multi-path-read contract)
-    assert "month" in read_partitioned(spark, path).columns
-
-    upd = spark.createDataFrame([("k1", 2, "2024-01", "a2")], SCHEMA)
-    assert merge_vp(spark, path, upd, "k", "ver", "month") == 2
-    assert _state(read_partitioned(spark, path, version=1)) == _state(
-        _base(spark)
-    )
-    with pytest.raises(RuntimeError, match="already has published"):
-        adopt_partitioned(spark, path, hive, "month")

@@ -27,9 +27,7 @@ EXTRA_NOTES = {
         "training, each vocabulary-sized — see operators/train)"
     ),
     "q18_word_frequency": (
-        "exact countDistinct adds a 2nd shuffle; "
-        "exact_distinct=False switches to HLL++ approx_count_distinct "
-        "(single shuffle) for 100 TB"
+        "exact countDistinct adds a 2nd shuffle (kept for oracle parity)"
     ),
     "q55_srp_lsh_near_dup": (
         "per-row signature expressions make a large plan (fixed compile "
