@@ -1637,7 +1637,8 @@ GROUP BY user_id
 )
 def q151_gdpr_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user deletion audit of a right-to-be-forgotten purge, computed
-    FROM THE VERSIONED STORE (sources/versioned.purge_keys): the CDC diff
+    FROM THE VERSIONED STORE (sources/versioned.purge_keys on an
+    unpartitioned table, so v2 is a whole-table rewrite): the CDC diff
     between the pre-purge and post-purge snapshots
     (operators/merge.snapshot_diff) yields exactly the deleted keys'
     rows, and a left anti-check against the CURRENT version proves no
@@ -1650,8 +1651,8 @@ def q151_gdpr_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the audit reads two manifest-pinned parquet versions and
     diffs on the key (bucketed at rest at 100 TB -> zipped per-bucket
     join); the per-user rollup partial-combines.  The purge itself (in
-    setup) is one broadcast anti-join + rewrite — the unavoidable
-    physical-deletion cost on immutable storage.
+    setup) is one anti-join + rewrite under the table lock — the
+    unavoidable physical-deletion cost on immutable storage.
     """
     from cosmo_spark.operators.merge import snapshot_diff
     from cosmo_spark.sources.versioned import (
@@ -2114,10 +2115,7 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
     versions."""
     import os
 
-    from cosmo_spark.sources.versioned_parts import (
-        merge_into_partitioned_versioned,
-        purge_keys_partitioned,
-    )
+    from cosmo_spark.sources.versioned import merge_into_path, purge_keys
 
     base = _purge_parts_dir(sf_dir)
     table = os.path.join(base, "events_parts")
@@ -2129,8 +2127,8 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
         "event_id", "user_id", "event_type", "value"
     )
     v1 = ev.withColumn("ver", F.lit(1))
-    published = merge_into_partitioned_versioned(
-        spark, table, v1, "event_id", "ver", "event_type"
+    published = merge_into_path(
+        spark, table, v1, "event_id", "ver", partition_col="event_type"
     )
     if published > 0:   # an EMPTY corpus publishes nothing — the query
         upd = (         # degrades to an empty audit (oracle agrees)
@@ -2138,13 +2136,13 @@ def ensure_partitioned_purge_demo(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("ver", F.lit(2))
             .withColumn("value", F.col("value") + F.lit(1000.0))
         )
-        merge_into_partitioned_versioned(
-            spark, table, upd, "event_id", "ver", "event_type"
+        merge_into_path(
+            spark, table, upd, "event_id", "ver", partition_col="event_type"
         )
         tomb = ev.filter(
             F.col("user_id") % _Q151_TOMB_MOD == 0
         ).select("user_id")
-        purge_keys_partitioned(spark, table, "user_id", tomb, "event_type")
+        purge_keys(spark, table, "user_id", tomb)
     open(marker, "w").close()
     return table
 
@@ -2165,8 +2163,8 @@ GROUP BY event_type
 """,
 )
 def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-partition lifecycle audit of the PARTITION-GRANULAR snapshot
-    store (sources/versioned_parts — round-9 verdict #2 closed): the
+    """Per-partition lifecycle audit of a PARTITIONED table in the
+    snapshot store (sources/versioned, ``partition_col="event_type"``): the
     merge that loaded the table, the version-guarded update and the
     right-to-be-forgotten purge are all read back FROM THE MANIFEST'S
     VERSION HISTORY — n_before from time-traveling to v1, n_updated as
@@ -2174,8 +2172,8 @@ def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_remaining anti-checked against the current version (the oracle
     pins it to the constant 0, so any surviving tombstoned row is a
     hash mismatch).  Untouched partitions share generation directories
-    across all three versions — the store's whole point; the unit suite
-    (tests/test_versioned_parts.py) pins the sharing byte-for-byte.
+    across all three versions — the partitioned layout's whole point;
+    the partitioned-layout unit suite pins the sharing byte-for-byte.
 
     Scale shape: three manifest-pinned multi-path parquet scans + CDC
     diffs keyed on event_id (bucketed at rest at 100 TB → zipped
@@ -2184,14 +2182,11 @@ def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions' generations.
     """
     from cosmo_spark.operators.merge import snapshot_diff
-    from cosmo_spark.sources.versioned_parts import (
-        partitioned_versions,
-        read_partitioned,
-    )
+    from cosmo_spark.sources.versioned import read_snapshot, snapshot_versions
 
     tune_session(spark)
     table = ensure_partitioned_purge_demo(spark, sf_dir)
-    versions = partitioned_versions(table)
+    versions = snapshot_versions(table)
     if len(versions) < 3:
         # an EMPTY corpus publishes no versions (the builder degrades);
         # the oracle's GROUP BY over zero rows is empty too.  Fewer than
@@ -2203,9 +2198,9 @@ def q157_partitioned_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_purged LONG, n_remaining LONG"
         )
     v1, v2, v3 = versions[-3:]
-    old = read_partitioned(spark, table, v1)
-    mid = read_partitioned(spark, table, v2)
-    cur = read_partitioned(spark, table, v3)
+    old = read_snapshot(spark, table, v1)
+    mid = read_snapshot(spark, table, v2)
+    cur = read_snapshot(spark, table, v3)
     before = old.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_before")
     )

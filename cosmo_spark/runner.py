@@ -89,15 +89,16 @@ def _ingest_sms(spark, sms_dir: str, data_dir: str) -> None:
     (ref: SMSFinder + ingest_files, cosmo/sms/ingest_sms.py:201-301)."""
     from cosmo_spark.operators.merge import merge_into_path
     from cosmo_spark.sources.sms import find_new, parse_sms_reports, sms_catalog
-    from cosmo_spark.sources.versioned import read_current
+    from cosmo_spark.sources.versioned import read_current, snapshot_versions
 
     catalog_path = os.path.join(data_dir, "sms_file_stats.parquet")
     rows_path = os.path.join(data_dir, "sms_exposures.parquet")
 
     catalog = sms_catalog(spark, sms_dir)
-    # merges publish snapshot versions now — read the manifest-pinned
-    # current state, not the table root
-    log = read_current(spark, catalog_path) if os.path.exists(catalog_path) else None
+    # merges publish snapshot versions — read the manifest-pinned current
+    # state, not the table root; a dir left by a merge that failed before
+    # its first publish has no manifest and counts as no log
+    log = read_current(spark, catalog_path) if snapshot_versions(catalog_path) else None
     # materialize eagerly: `new` is derived from the catalog table we are
     # about to overwrite — a lazy plan would re-read the post-merge log and
     # silently find nothing new
@@ -108,9 +109,13 @@ def _ingest_sms(spark, sms_dir: str, data_dir: str) -> None:
         return
     merge_into_path(spark, catalog_path, new, "SMSID", "VERSION")
     exposures = parse_sms_reports(spark, sms_dir)
-    new_rows = exposures.join(new.select("FILEID"), "FILEID", "left_semi")
+    # materialized once: the count and the merge share one parse
+    new_rows = exposures.join(
+        new.select("FILEID"), "FILEID", "left_semi"
+    ).localCheckpoint()
+    n_rows = new_rows.count()
     merge_into_path(spark, rows_path, new_rows, "EXPOSURE", "FILEID")
-    print(f"sms ingest: merged {new_rows.count()} exposure rows")
+    print(f"sms ingest: merged {n_rows} exposure rows")
 
 
 if __name__ == "__main__":

@@ -164,8 +164,8 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
 
     ``os.path.exists`` only sees the LOCAL filesystem — on hdfs:// or
     object-store paths it silently answers False, which for the
-    read-if-present call sites (merge_into_path, the rollup maintenance)
-    would mean treating an existing table as absent and overwriting it.
+    read-if-present call sites (the streaming rollup maintenance) would
+    mean treating an existing table as absent and overwriting it.
     Same handle discipline as ``atomic_overwrite`` below.
     """
     jvm = spark._jvm
@@ -192,10 +192,11 @@ def atomic_overwrite(df, path: str) -> None:
     """Replace the parquet table at ``path`` with ``df``: write to a tmp
     sibling, then delete+rename through the Hadoop FileSystem API.
 
-    The single swap implementation behind full-rewrite merge
-    (operators/merge.py), compaction (sources/layout.py), and the streaming
-    rollup maintenance (streaming/rates.py) — one place to harden the
-    crash window between delete and rename.  Routing the swap through the
+    The single swap implementation behind compaction (sources/layout.py)
+    and the streaming rollup maintenance (streaming/rates.py) — one place
+    to harden the crash window between delete and rename.  Versioned
+    merge targets never swap in place: they publish snapshot versions
+    (sources/versioned.py).  Routing the swap through the
     FS API (not shutil/os) makes it scheme-portable; rename is atomic on
     HDFS/local, copy-based on object stores.
     """

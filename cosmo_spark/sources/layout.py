@@ -176,18 +176,18 @@ def compact_table(
     """Compact a small-file parquet table to ~``target_file_bytes`` files;
     returns the new file count.
 
-    Streaming/micro-batch ingest (stream_ingest_merge, stream_ingest_dedup)
-    appends one file set per trigger; after a day of 1-minute batches a
-    table is thousands of KB-sized files whose open/footer overhead
-    dominates scans.  Compaction = read, repartition to
-    ceil(total_bytes/target), atomic-swap rewrite (the merge_into_path
-    discipline).  Sizing reads the filesystem's content summary through
-    the Hadoop FS API, so it works on any supported scheme, and the
-    repartition is a round-robin exchange — the ONLY shuffle, carrying
-    each byte once.  At 100 TB you compact per partition directory
+    Append-only micro-batch ingest (stream_ingest_dedup) adds one file
+    set per trigger; after a day of 1-minute batches a table is thousands
+    of KB-sized files whose open/footer overhead dominates scans.
+    Compaction = read, repartition to ceil(total_bytes/target),
+    atomic-swap rewrite (``atomic_overwrite``).  Sizing reads the
+    filesystem's content summary through the Hadoop FS API, so it works
+    on any supported scheme, and the repartition is a round-robin
+    exchange — the ONLY shuffle, carrying each byte once.  At 100 TB you compact per partition directory
     (compact only partitions whose file count exceeds a threshold), which
-    is this operation applied per partition generation of the versioned
-    partitioned store instead of the whole-table swap.
+    is this operation applied per partition generation of a partitioned
+    table in the versioned store (sources/versioned.py) instead of the
+    whole-table swap.
     """
     import math
 

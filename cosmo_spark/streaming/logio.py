@@ -23,7 +23,8 @@ place the protocols touch a filesystem:
   is a single ``create(overwrite=True)`` PUT — atomic object visibility —
   and DIRECTORY publishes must be gated by a manifest/marker rather than
   the rename itself.  :func:`publish_dir` implements the marker protocol
-  (the versioned store's manifest-pointer idea, sources/versioned.py).
+  (the manifest-pointer idea of sources/versioned.py, whose own manifest
+  swap is a local ``os.replace``, not this module).
 
 fsync is meaningful only where an OS page cache sits under our control
 (bare local and ``file:`` paths); on other schemes ``close()`` is the

@@ -18,10 +18,7 @@ from cosmo_spark.operators.merge import (
     _table_lock,
     merge_into_path,
 )
-from cosmo_spark.sources.versioned_parts import (
-    merge_into_partitioned_versioned,
-    read_partitioned,
-)
+from cosmo_spark.sources.versioned import read_snapshot
 
 
 def _frame(spark, rows):
@@ -65,7 +62,7 @@ def test_interleaved_swap_schedule_loses_no_rows(spark, tmp_path):
     real_publish = versioned_mod._publish_locked
     contention: list[Exception] = []
 
-    def publish_with_concurrent_writer(table_path, tmp, doc, guard=None):
+    def publish_with_concurrent_writer(table_path, *args):
         # writer A has read the base and is about to publish; writer B's
         # whole merge attempt happens NOW — the schedule that silently
         # dropped B's rows pre-lock
@@ -76,7 +73,7 @@ def test_interleaved_swap_schedule_loses_no_rows(spark, tmp_path):
             )
         except MergeContentionError as e:
             contention.append(e)
-        return real_publish(table_path, tmp, doc, guard)
+        return real_publish(table_path, *args)
 
     versioned_mod._publish_locked = publish_with_concurrent_writer
     try:
@@ -103,18 +100,18 @@ def test_partitioned_merge_honors_the_same_lock(spark, tmp_path):
         [("k1", 1, "2024-01", "a")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
-    merge_into_partitioned_versioned(spark, path, base, "k", "ver", "month")
+    merge_into_path(spark, path, base, "k", "ver", partition_col="month")
     upd = spark.createDataFrame(
         [("k2", 1, "2024-01", "b")],
         "k STRING, ver INT, month STRING, payload STRING",
     )
     with _table_lock(spark, path):
         with pytest.raises(MergeContentionError):
-            merge_into_partitioned_versioned(
-                spark, path, upd, "k", "ver", "month"
+            merge_into_path(
+                spark, path, upd, "k", "ver", partition_col="month"
             )
-    merge_into_partitioned_versioned(spark, path, upd, "k", "ver", "month")
-    assert {r.k for r in read_partitioned(spark, path).collect()} == {"k1", "k2"}
+    merge_into_path(spark, path, upd, "k", "ver", partition_col="month")
+    assert {r.k for r in read_snapshot(spark, path).collect()} == {"k1", "k2"}
 
 
 def test_expired_lease_recovers_without_operator(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Partition-pruned merge into the versioned partitioned store
-(sources/versioned_parts.merge_into_partitioned_versioned): only affected
+"""Partition-pruned merge into the versioned store's partitioned layout
+(``merge_into_path(..., partition_col=)``): only affected
 partitions are rewritten, untouched generations are shared across
 versions, and a raw Hive-layout directory is refused loudly."""
 
@@ -10,10 +10,8 @@ import os
 
 import pytest
 
-from cosmo_spark.sources.versioned_parts import (
-    merge_into_partitioned_versioned,
-    read_partitioned,
-)
+from cosmo_spark.operators.merge import merge_into_path
+from cosmo_spark.sources.versioned import read_snapshot, snapshot_versions
 
 
 def part_files(path, part):
@@ -27,8 +25,9 @@ def part_files(path, part):
 
 
 def merge(spark, path, df, retain_versions=1):
-    return merge_into_partitioned_versioned(
-        spark, path, df, "k", "ver", "month", retain_versions=retain_versions
+    return merge_into_path(
+        spark, path, df, "k", "ver", retain_versions=retain_versions,
+        partition_col="month",
     )
 
 
@@ -52,7 +51,7 @@ def test_merge_touches_only_affected_partitions(spark, tmp_path):
     merge(spark, path, updates)
 
     state = {r.k: (r.ver, r.payload, r.month)
-             for r in read_partitioned(spark, path).collect()}
+             for r in read_snapshot(spark, path).collect()}
     assert state == {
         "k1": (2, "a2", "2024-01"),
         "k2": (1, "b", "2024-01"),
@@ -105,7 +104,7 @@ def test_merge_many_partitions_rewrites_one(spark, tmp_path):
         else:
             assert part_files(path, m) == snap
     row = {r.k: r.ver
-           for r in read_partitioned(spark, path)
+           for r in read_snapshot(spark, path)
            .filter("month = '2020-08'").collect()}
     assert row["k7"] == 2
 
@@ -114,8 +113,6 @@ def test_default_layout_retains_single_version(spark, tmp_path):
     """retain_versions=1 keeps storage at in-place cost: after a second
     merge only the current version survives, and its shared generations
     are intact."""
-    from cosmo_spark.sources.versioned_parts import partitioned_versions
-
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [("k1", 1, "2024-01", "a"), ("k3", 1, "2024-02", "c")],
@@ -128,16 +125,16 @@ def test_default_layout_retains_single_version(spark, tmp_path):
     )
     v2 = merge(spark, path, upd)
     assert (v1, v2) == (1, 2)
-    assert partitioned_versions(path) == [2]
-    state = {r.k: r.ver for r in read_partitioned(spark, path).collect()}
+    assert snapshot_versions(path) == [2]
+    state = {r.k: r.ver for r in read_snapshot(spark, path).collect()}
     assert state == {"k1": 2, "k3": 1}
     # history on demand: retain_versions=None keeps both
     path2 = str(tmp_path / "tbl_hist")
     merge(spark, path2, base, retain_versions=None)
     merge(spark, path2, upd, retain_versions=None)
-    assert partitioned_versions(path2) == [1, 2]
+    assert snapshot_versions(path2) == [1, 2]
     old = {r.k: r.ver
-           for r in read_partitioned(spark, path2, version=1).collect()}
+           for r in read_snapshot(spark, path2, version=1).collect()}
     assert old == {"k1": 1, "k3": 1}
 
 

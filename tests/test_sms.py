@@ -127,16 +127,20 @@ def test_ingest_cli_end_to_end(spark, tmp_path):
             capture_output=True, text=True, cwd="/root/repo", timeout=300,
         )
 
+    from cosmo_spark.sources.versioned import read_current
+
+    def count(table):
+        return read_current(spark, str(data_dir / f"{table}.parquet")).count()
+
     proc = run()
     assert proc.returncode == 0, proc.stderr[-2000:]
-    cat = spark.read.parquet(str(data_dir / "sms_file_stats.parquet"))
-    rows_df = spark.read.parquet(str(data_dir / "sms_exposures.parquet"))
-    assert cat.count() == 1 and rows_df.count() == 2
+    assert "merged 2 exposure rows" in proc.stdout
+    assert count("sms_file_stats") == 1 and count("sms_exposures") == 2
 
     proc2 = run()
     assert proc2.returncode == 0
     assert "0 new files" in proc2.stdout
-    assert spark.read.parquet(str(data_dir / "sms_exposures.parquet")).count() == 2
+    assert count("sms_file_stats") == 1 and count("sms_exposures") == 2
 
 
 def test_exposure_merge_fileid_guard(spark, tmp_path):

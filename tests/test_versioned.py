@@ -5,7 +5,6 @@ vacuum retention, and CDC between versions via snapshot_diff."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -128,28 +127,58 @@ def test_merge_publishes_time_travelable_versions(spark, tmp_path):
     )
 
 
-def test_merge_adopts_flat_table_zero_copy(spark, tmp_path):
-    """A legacy FLAT parquet table's first snapshot-backed merge moves the
-    existing files into v=1 (pre-merge state retained) and publishes the
-    merged state as v=2."""
+def test_merge_refuses_manifestless_flat_table_untouched(spark, tmp_path):
+    """A flat parquet dir with no version manifest is not the store's: a
+    merge and a snapshot write refuse it with ValueError, a purge finds no
+    published table, and every entry stays as it was — no manifest
+    appears, nothing moves."""
     from cosmo_spark.operators.merge import merge_into_path
-    from cosmo_spark.sources.versioned import read_current
+    from cosmo_spark.sources.versioned import purge_keys
 
     path = str(tmp_path / "flat")
-    spark.createDataFrame(
+    old = spark.createDataFrame(
         [("a", 1, "old")], "k STRING, ver INT, payload STRING"
-    ).write.parquet(path)
-
-    v = merge_into_path(
-        spark, path,
-        spark.createDataFrame([("a", 2, "new")],
-                              "k STRING, ver INT, payload STRING"),
-        "k", "ver",
     )
-    assert v == 2 and snapshot_versions(path) == [1, 2]
-    assert {r.payload for r in read_snapshot(spark, path, 1).collect()} \
-        == {"old"}
-    assert {r.payload for r in read_current(spark, path).collect()} == {"new"}
+    old.write.parquet(path)
+    before = sorted(os.listdir(path))
+
+    with pytest.raises(ValueError, match="no version manifest"):
+        merge_into_path(spark, path, old, "k", "ver")
+    with pytest.raises(ValueError, match="no version manifest"):
+        write_snapshot(old, path)
+    with pytest.raises(KeyError):
+        purge_keys(spark, path, "k", old)
+    assert sorted(os.listdir(path)) == before
+    assert snapshot_versions(path) == []
+    assert {r.payload for r in spark.read.parquet(path).collect()} == {"old"}
+
+
+def test_merge_refuses_partition_col_mismatch(spark, tmp_path):
+    """The manifest records the partition column at the first publish; a
+    merge or snapshot write that disagrees raises and publishes nothing."""
+    from cosmo_spark.operators.merge import merge_into_path
+
+    def mframe(rows):
+        return spark.createDataFrame(
+            rows, "k STRING, ver INT, month STRING"
+        )
+
+    flat = str(tmp_path / "flat")
+    merge_into_path(spark, flat, mframe([("a", 1, "2024-01")]), "k", "ver")
+    with pytest.raises(ValueError, match="partitioned by None"):
+        merge_into_path(spark, flat, mframe([("a", 2, "2024-01")]), "k",
+                        "ver", partition_col="month")
+
+    parted = str(tmp_path / "parted")
+    merge_into_path(spark, parted, mframe([("a", 1, "2024-01")]), "k", "ver",
+                    partition_col="month")
+    with pytest.raises(ValueError, match="partitioned by 'month'"):
+        merge_into_path(spark, parted, mframe([("a", 2, "2024-01")]), "k",
+                        "ver")
+    with pytest.raises(ValueError, match="partitioned by 'month'"):
+        write_snapshot(mframe([("a", 2, "2024-01")]), parted)
+    assert snapshot_versions(flat) == [1] and snapshot_versions(parted) == [1]
+    assert {r.ver for r in read_snapshot(spark, parted).collect()} == {1}
 
 
 def test_slow_publish_blocks_no_reader_and_no_rival_publisher(spark, tmp_path):
@@ -198,49 +227,6 @@ def test_slow_publish_blocks_no_reader_and_no_rival_publisher(spark, tmp_path):
     assert out["slow"] == 3
     assert _state(spark, path, 2) == {"a": 2}
     assert _state(spark, path, 3) == {"a": 99}
-
-
-def test_interrupted_migration_recovers_without_data_loss(spark, tmp_path):
-    """r9 self-review #1: both crash windows of the flat-table adoption
-    must recover on the next merge — never hand the orphan reaper the
-    only copy of the table."""
-    import os
-    import shutil
-
-    from cosmo_spark.operators.merge import merge_into_path
-
-    def mframe(rows):
-        return spark.createDataFrame(rows, "k STRING, ver INT, payload STRING")
-
-    # (a) crash AFTER the v=1 rename, BEFORE the manifest write: simulate
-    # by building a healthy versioned table and deleting the manifest
-    path = str(tmp_path / "a")
-    spark.createDataFrame([("a", 1, "old")],
-                          "k STRING, ver INT, payload STRING").write.parquet(path)
-    merge_into_path(spark, path, mframe([("b", 1, "b1")]), "k", "ver")
-    os.remove(os.path.join(path, "_versions.json"))
-    shutil.rmtree(os.path.join(path, "v=2"))   # the unadopted state is v=1
-    merge_into_path(spark, path, mframe([("c", 1, "c1")]), "k", "ver")
-    assert {r.k for r in read_snapshot(spark, path, 1).collect()} == {"a"}, (
-        "the orphan reaper must not eat the unadopted v=1"
-    )
-    assert {r.k for r in read_snapshot(spark, path).collect()} == {"a", "c"}
-
-    # (b) crash MID-MOVE: some flat entries already inside v.tmp-migrate
-    path = str(tmp_path / "b")
-    spark.createDataFrame([("a", 1, "old"), ("b", 1, "old")],
-                          "k STRING, ver INT, payload STRING") \
-        .coalesce(2).write.parquet(path)
-    mig = os.path.join(path, "v.tmp-migrate")
-    os.makedirs(mig)
-    moved = [e for e in os.listdir(path)
-             if e.startswith("part-")][:1]      # half the move happened
-    for e in moved:
-        os.rename(os.path.join(path, e), os.path.join(mig, e))
-    merge_into_path(spark, path, mframe([("c", 2, "new")]), "k", "ver")
-    assert {r.k for r in read_snapshot(spark, path, 1).collect()} \
-        == {"a", "b"}, "resumed migration must recover ALL flat rows"
-    assert {r.k for r in read_snapshot(spark, path).collect()} == {"a", "b", "c"}
 
 
 def test_broken_lease_holder_aborts_at_commit(spark, tmp_path):
@@ -332,3 +318,31 @@ def test_purge_keys_deletes_only_tombstoned_and_vacuum_erases_bytes(
 
     with _pytest.raises(KeyError):
         read_snapshot(spark, path, v1)
+
+
+def test_flat_manifest_format_reads_and_merges(spark, tmp_path):
+    """A flat table's manifest entries carry no ``parts`` map — the format
+    the flat store has always written — so a table published by earlier
+    code reads each entry as ``{"": "v=N"}``, and a merge on top of it
+    keeps the same manifest and ``v=N`` layout."""
+    import json
+
+    from cosmo_spark.operators.merge import merge_into_path
+
+    path = str(tmp_path / "tbl")
+    mframe = "k STRING, ver INT, payload STRING"
+    spark.createDataFrame([("a", 1, "a1")], mframe).write.parquet(
+        os.path.join(path, "v=1")
+    )
+    with open(os.path.join(path, "_versions.json"), "w") as f:
+        json.dump({"current": 1, "versions": [{"version": 1}]}, f)
+    assert {r.payload for r in read_snapshot(spark, path).collect()} == {"a1"}
+    v = merge_into_path(
+        spark, path, spark.createDataFrame([("b", 1, "b1")], mframe),
+        "k", "ver", retain_versions=1,
+    )
+    assert v == 2 and snapshot_versions(path) == [2]
+    assert {r.k for r in read_snapshot(spark, path).collect()} == {"a", "b"}
+    assert sorted(e for e in os.listdir(path) if e.startswith("v")) == ["v=2"]
+    with open(os.path.join(path, "_versions.json")) as f:
+        assert json.load(f) == {"current": 2, "versions": [{"version": 2}]}
