@@ -190,18 +190,19 @@ def main() -> None:
             df.collect()
             samples[name].append(time.time() - t0)
             build_samples[name].append(t_built - t0)
-            # hygiene between queries: drop any intermediates a query
-            # persisted internally so later queries aren't measured under
-            # the accumulated storage pressure of the whole catalog (and
-            # later PASSES don't get cache-hit flattery from identical
-            # logical plans persisting across passes)
+            # hygiene between queries.  No catalog query leaves a cached
+            # frame behind (tests/test_cache_lifetime.py keeps the
+            # CacheManager empty after every query), so clearCache() is a
+            # guard: a regression that pins a frame must not hand later
+            # queries or passes cache-hit flattery from the same plan
             spark.catalog.clearCache()
-            # checkpointed/persisted RDDs (q97's localCheckpoint passes,
-            # q79's verdict lifecycle) survive clearCache — unpersist them
-            # too so every query's min is the same cold regime (round-5
-            # verdict #4).  _jsc is private API (no public PySpark
-            # equivalent as of 4.x) — a PySpark bump must degrade to a
-            # VISIBLE warning, never silently un-fix the discipline
+            # checkpoint RDDs (every query that localCheckpoints a frame
+            # leaves some) are freed only when a JVM GC happens to run the
+            # ContextCleaner — unpersist them so every query's min is the
+            # same cold regime (round-5 verdict #4).  _jsc is private API
+            # (no public PySpark equivalent as of 4.x) — a PySpark bump
+            # must degrade to a VISIBLE warning, never silently un-fix the
+            # discipline
             try:
                 for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
                     jrdd.unpersist()

@@ -110,9 +110,11 @@ def bloom_semi_join(
     prefiltered sliver of ``big``.
     """
     # keys has exactly two consumers (bitset build + exact re-check); without
-    # a persist each would recompute the full filter-side lineage — for the
-    # decontamination case that is a second corpus-wide tokenize+hash pass
-    keys = keys.persist()
+    # materialising it each would recompute the full filter-side lineage —
+    # for the decontamination case that is a second corpus-wide
+    # tokenize+hash pass.  Checkpointed, not pinned: the returned frame
+    # reads it, and the checkpoint is reclaimed with that frame.
+    keys = keys.localCheckpoint()
     bf = bloom_build(keys, on, n_bits, n_hashes)
     pre = big.join(F.broadcast(bf)).filter(
         might_contain("bf", F.col(on), n_bits, n_hashes)

@@ -31,6 +31,7 @@ from cosmo_spark.functions.text import (
     token_hashes,
     tokenize,
 )
+from cosmo_spark.session import persisted
 
 #: deterministic (a, b) parameter pairs for MinHash permutations
 def minhash_perms(n: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -232,44 +233,39 @@ def cross_dedup(
     """
     # each shingle table feeds TWO consumers (its band rows and the Jaccard
     # verify side); per-character shingle hashing is the dominant cost, so
-    # persist both — and unpersist BEFORE returning: the per-doc verdict
-    # table below localCheckpoints (it is bounded at one row per incoming
-    # doc), which cuts the returned frame's lineage from the shingle
-    # tables, so repeated calls in a long-lived session no longer pin
-    # CORPUS-sized cached partitions (the stream_ingest_dedup finally-
-    # block discipline, restructured for a lazily-returned result).
-    # Honest residue: the call is now EAGER (the checkpoint runs the
-    # shingle/band/verify jobs at construction time), and each call
-    # leaves one small checkpoint RDD (≤ one row per incoming doc) to
-    # the ContextCleaner — bounded by the batch, not the corpus
-    sh_inc = shingle_table(incoming, text_col, id_col, shingle_n).persist()
-    sh_cor = shingle_table(corpus, text_col, id_col, shingle_n).persist()
-    b_inc = band_table(sh_inc, n_hashes, bands)
-    b_cor = band_table(sh_cor, n_hashes, bands).select(
-        F.col("doc").alias("doc_b"), "band_idx", "band_hash"
-    )
-    cand = (
-        b_inc.join(b_cor, ["band_idx", "band_hash"])
-        .select(F.col("doc").alias("id_a"), F.col("doc_b").alias("id_b"))
-        .distinct()
-    )
-    a = sh_inc.select(F.col("__id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh_cor.select(F.col("__id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", inter / union)
-    )
-    try:
+    # both are pinned — but only while the per-doc verdict table
+    # localCheckpoints (it is bounded at one row per incoming doc).  The
+    # checkpoint cuts the returned frame's lineage from the shingle tables,
+    # so repeated calls in a long-lived session never pin CORPUS-sized
+    # cached partitions.  The call is therefore EAGER (the checkpoint runs
+    # the shingle/band/verify jobs at construction time), and the small
+    # checkpoint RDD is reclaimed with the returned frame.
+    with persisted(
+        shingle_table(incoming, text_col, id_col, shingle_n),
+        shingle_table(corpus, text_col, id_col, shingle_n),
+    ) as (sh_inc, sh_cor):
+        b_inc = band_table(sh_inc, n_hashes, bands)
+        b_cor = band_table(sh_cor, n_hashes, bands).select(
+            F.col("doc").alias("doc_b"), "band_idx", "band_hash"
+        )
+        cand = (
+            b_inc.join(b_cor, ["band_idx", "band_hash"])
+            .select(F.col("doc").alias("id_a"), F.col("doc_b").alias("id_b"))
+            .distinct()
+        )
+        a = sh_inc.select(F.col("__id").alias("id_a"), F.col("sh").alias("sh_a"))
+        b = sh_cor.select(F.col("__id").alias("id_b"), F.col("sh").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size("sh_a") + F.size("sh_b") - inter
+        verified = (
+            cand.join(a, "id_a")
+            .join(b, "id_b")
+            .withColumn("jaccard", inter / union)
+        )
         per_doc = verified.groupBy("id_a").agg(
             F.count(F.lit(1)).alias("n_cand"),
             F.max("jaccard").alias("max_jaccard"),
         ).localCheckpoint()  # eager; one row per incoming doc
-    finally:
-        sh_inc.unpersist()
-        sh_cor.unpersist()
     return (
         incoming.select(F.col(id_col).alias("id_a"))
         .join(per_doc, "id_a", "left")
@@ -351,24 +347,38 @@ def duplicate_clusters(
 
     Input columns: id_a, id_b. Output: one row per node appearing in pairs.
     """
-    # persist the DIRECTIONAL pair list once: the path gate (one count),
-    # the driver-path collect, and the distributed path's edge build all
-    # read it, and its upstream (MinHash + Jaccard verification) must not
-    # be recomputed per consumer.  The symmetrize+distinct shuffle is paid
-    # ONLY on the distributed path — union-find treats each pair row as an
-    # undirected edge, so duplicates and orientation are irrelevant to it
-    # (r14: the symmetrized-distinct materialization was ~2 s of the
-    # q125/q136 closure at sf0.1 for a 1.5k-edge graph).
-    plist = pairs.select("id_a", "id_b").persist()
-    n_pairs = plist.count()
-    # gate on the symmetrized-edge bound (2 pairs per undirected edge) so
-    # the threshold keeps its historical meaning; the collect itself pulls
-    # only n_pairs two-column rows — at most half the old row count
-    if 2 * n_pairs <= driver_max_edges:
+    # pin the DIRECTIONAL pair list while it is read: the path gate (one
+    # count), the driver-path collect, and the distributed path's edge
+    # build all read it, and its upstream (MinHash + Jaccard verification)
+    # must not be recomputed per consumer.  The symmetrize+distinct shuffle
+    # is paid ONLY on the distributed path — union-find treats each pair
+    # row as an undirected edge, so duplicates and orientation are
+    # irrelevant to it (r14: the symmetrized-distinct materialization was
+    # ~2 s of the q125/q136 closure at sf0.1 for a 1.5k-edge graph).
+    with persisted(pairs.select("id_a", "id_b")) as plist:
+        n_pairs = plist.count()
+        # gate on the symmetrized-edge bound (2 pairs per undirected edge)
+        # so the threshold keeps its historical meaning; the collect itself
+        # pulls only n_pairs two-column rows — at most half the old count
+        driver_path = 2 * n_pairs <= driver_max_edges
+        if driver_path:
+            rows = plist.collect()
+        else:
+            # distributed label propagation needs the symmetrized distinct
+            # edge list (each round joins neighbors by src); checkpointed
+            # from the pinned pair list, so the pair pipeline runs exactly
+            # once and every round reads a lineage-free leaf
+            edges = (
+                plist.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+                .unionByName(
+                    plist.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+                )
+                .distinct()
+                .localCheckpoint()
+            )
+    if driver_path:
         from pyspark.sql.types import StructField, StructType
 
-        rows = plist.collect()
-        plist.unpersist()
         parent: dict = {}
 
         def find(x):
@@ -401,22 +411,10 @@ def duplicate_clusters(
         return pairs.sparkSession.createDataFrame(
             [(x, comp_min[find(x)]) for x in sorted(nodes)], out_schema
         )
-    # distributed label propagation needs the symmetrized distinct edge
-    # list (each round joins neighbors by src); built from the cached
-    # pair list, so the expensive pair pipeline runs exactly once
-    edges = (
-        plist.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            plist.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
     # size the per-round tables to the graph, not the session default —
     # near-dup graphs are usually tiny relative to the corpus, and every
     # propagation round pays per-partition task overhead
     n_edges = edges.count()
-    plist.unpersist()
     n_parts = max(1, min(n_edges // 500_000, 2000) or 1)
     edges = edges.coalesce(n_parts)
     # the label table is bounded by the node count (≤ 2·edges); when the
@@ -483,7 +481,6 @@ def duplicate_clusters(
         if not changed:
             converged = True
             break
-    edges.unpersist()
     if not converged:
         raise RuntimeError(
             f"duplicate_clusters did not converge in {max_iterations} rounds "
@@ -745,13 +742,14 @@ def srp_lsh_near_dups(
         # count, so this does NOT cap shuffle parallelism the way a
         # few-bit geometry would.
         .repartition("band", "code")
-        # persist: three consumers read this table (the bucket-size guard
-        # aggregation and both self-join sides) and the broadcast-guard
-        # rewrite defeats plain exchange reuse between them — measured 3x
-        # signature recompute (7.3s -> 3.5s at sf0.1) without the persist.
-        # Same multi-consumer discipline as merge.py / q58's vocab; cleanup
-        # falls to the ContextCleaner when the plan is released.
-        .persist()
+        # checkpoint: three consumers read this table (the bucket-size
+        # guard aggregation and both self-join sides) and the
+        # broadcast-guard rewrite defeats plain exchange reuse between
+        # them — measured 3x signature recompute (7.3s -> 3.5s at sf0.1)
+        # without materialising it.  Same multi-consumer discipline as
+        # q58's vocab; the returned pairs read it, so it is checkpointed
+        # (reclaimed with the frame), not pinned in the CacheManager.
+        .localCheckpoint()
     )
     if max_bucket is not None:
         # partial agg on the already-partitioned key, then a broadcast join

@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def triangle_counts(
-    edges: DataFrame, u: str = "u", v: str = "v", persist: bool = True
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     """Per-node triangle counts of an undirected simple graph.
 
     ``edges`` must hold each undirected edge once (any endpoint order, no
@@ -47,25 +45,22 @@ def triangle_counts(
     join (see module docstring); per-node counts then credit all three
     corners of every triangle.
 
-    ``persist`` (default on) caches the three multiply-consumed frames —
-    the edge list (3 scans: two degree-union branches + the degree join),
-    the degree table (3: two orientation joins + the output join) and the
+    The three multiply-consumed frames are localCheckpointed — the edge
+    list (3 scans: two degree-union branches + the degree join), the
+    degree table (3: two orientation joins + the output join) and the
     oriented edge list (3: both wedge sides + the closing join) — so the
     upstream edge derivation runs once instead of being re-expanded per
-    branch (the q106 lesson); cleanup is the ContextCleaner's once the
-    plan is released.
+    branch (the q106 lesson).  The call is therefore eager; the returned
+    frame reads the checkpoints, which are reclaimed with it.
     """
-    e = edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
-    if persist:
-        e = e.persist()
+    e = edges.select(F.col(u).alias("u"), F.col(v).alias("v")).localCheckpoint()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
+        .localCheckpoint()
     )
-    if persist:
-        deg = deg.persist()
     ed = (
         e.join(deg.select(F.col("node").alias("u"), F.col("degree").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("degree").alias("dv")), "v")
@@ -78,9 +73,7 @@ def triangle_counts(
         F.when(lt, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(lt, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(lt, F.col("dv")).otherwise(F.col("du")).alias("ddst"),
-    )
-    if persist:
-        oriented = oriented.persist()
+    ).localCheckpoint()
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # wedge (a; b, c) with rank(b) < rank(c); rank(dst) = (ddst, dst)
     wedge_lt = (F.col("o1.ddst") < F.col("o2.ddst")) | (

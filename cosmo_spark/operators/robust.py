@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cosmo_spark.session import persisted
+
 #: Iglewicz-Hoaglin consistency constant for the modified z-score
 MAD_K = 0.6745
 
@@ -104,21 +106,21 @@ def robust_outliers(
         # cannot share the join+abs work — persisting it measured
         # 4.9 -> 3.4 s at sf0.1 (persisting the raw facts measured WORSE,
         # 7.3 s: the parquet scan is cheaper than a cache round-trip)
-        dev = dev.persist()
-        mad = _median(dev, key, "__adev", "__tb", out_col="mad")
-        # force the group-cardinality stats table NOW so dev's cache can be
-        # released before returning — a library caller must not accumulate
-        # a pinned fact-sized cache per invocation (review r7).  Collect-
-        # and-recreate rather than localCheckpoint: checkpoint blocks are
-        # unreplicated and die with a decommissioned executor, failing the
-        # caller's LATER action unrecoverably (review r7 #2); the stats
-        # frame is groups-sized, so a driver round-trip is the safe
-        # materialization.
-        joined = med.join(mad, key)
-        stats = df.sparkSession.createDataFrame(
-            joined.collect(), joined.schema
-        )
-        dev.unpersist()
+        with persisted(dev):
+            mad = _median(dev, key, "__adev", "__tb", out_col="mad")
+            # force the group-cardinality stats table NOW so dev's cache is
+            # released before returning — a library caller must not
+            # accumulate a pinned fact-sized cache per invocation (review
+            # r7).  Collect-and-recreate rather than localCheckpoint:
+            # checkpoint blocks are unreplicated and die with a
+            # decommissioned executor, failing the caller's LATER action
+            # unrecoverably (review r7 #2); the stats frame is
+            # groups-sized, so a driver round-trip is the safe
+            # materialization.
+            joined = med.join(mad, key)
+            stats = df.sparkSession.createDataFrame(
+                joined.collect(), joined.schema
+            )
     else:
         mad = _median(dev, key, "__adev", "__tb", out_col="mad")
         stats = med.join(mad, key)

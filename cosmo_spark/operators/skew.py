@@ -124,16 +124,16 @@ def hot_cold_dict_join(
     map pass over ``big`` and a TakeOrdered over the key set; buys bounded
     reducers at any corpus size.
     """
-    # persist the tiny hot-key set: three branches consume it (hot semi-join,
-    # cold anti-join, fact anti-join) and without a persist each would re-run
-    # the dictionary-wide distinct-key aggregation + global top-k
+    # checkpoint the tiny hot-key set: three branches consume it (hot
+    # semi-join, cold anti-join, fact anti-join) and without it each would
+    # re-run the dictionary-wide distinct-key aggregation + global top-k
     hot_keys = F.broadcast(
         dim.groupBy(on)
         .agg(F.max(freq_col).alias("__hot_freq"))
         .orderBy(F.col("__hot_freq").desc(), F.col(on))
         .limit(hot_k)
         .select(on)
-        .persist()
+        .localCheckpoint()
     )
     hot_dim = F.broadcast(dim.join(hot_keys, on, "left_semi"))
     # hot keys are matchless on the cold side by construction — anti-join

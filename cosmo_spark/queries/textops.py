@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cosmo_spark.queries import register
-from cosmo_spark.session import tune_session
+from cosmo_spark.session import persisted, tune_session
 from cosmo_spark.sources.tables import load_table
 from cosmo_spark.functions.text import (
     HASH_BASE,
@@ -415,13 +415,16 @@ def q45_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cosmo_spark.operators.dedup import duplicate_clusters, shingle_table
 
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
-    cands = minhash_candidates(
-        d, "text", "doc_id", n_hashes=8, bands=4, shingle_n=3, shingles=sh
-    )
-    verified = ngram_jaccard_pairs(d, "text", "doc_id", candidate_pairs=cands,
-                                   shingles=sh)
-    return duplicate_clusters(verified.select("id_a", "id_b"))
+    # the shingle table feeds the signatures and the verify; the closure
+    # reads the verified pairs eagerly, so the pin ends with the call
+    with persisted(shingle_table(d, "text", "doc_id", shingle_n=3)) as sh:
+        cands = minhash_candidates(
+            d, "text", "doc_id", n_hashes=8, bands=4, shingle_n=3, shingles=sh
+        )
+        verified = ngram_jaccard_pairs(
+            d, "text", "doc_id", candidate_pairs=cands, shingles=sh
+        )
+        return duplicate_clusters(verified.select("id_a", "id_b"))
 
 
 @register(
@@ -472,8 +475,9 @@ def q39_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     # hash shingles once, reuse for both signature and verification — the
-    # per-character hashing is the dominant cost
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    # per-character hashing is the dominant cost; checkpointed because the
+    # returned frame reads it
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     cands = minhash_candidates(
         d, "text", "doc_id", n_hashes=8, bands=4, shingle_n=3, shingles=sh
     )
@@ -725,17 +729,20 @@ def q58_rare_word_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail shuffle-joins.  A whole-vocab broadcast is NOT the answer at
     100 TB: a web corpus's tail vocabulary is itself corpus-scale.
 
-    ``vocab`` is persisted: it feeds three consumers inside the hot/cold
-    join (hot-key TakeOrdered, the anti-join key set, the cold join), and
-    without an explicit persist its corpus-scale aggregation would be
-    recomputed per branch unless Catalyst happens to reuse the exchange.
-    Cleanup is left to the ContextCleaner once the plan is released.
+    ``vocab`` is localCheckpointed: it feeds three consumers inside the
+    hot/cold join (hot-key TakeOrdered, the anti-join key set, the cold
+    join), and without materialising it its corpus-scale aggregation
+    would be recomputed per branch unless Catalyst happens to reuse the
+    exchange.  The checkpoint cuts the returned frame's lineage and is
+    reclaimed with it; no cached frame outlives the query.
     """
     from cosmo_spark.operators.skew import hot_cold_dict_join
 
     d = _t(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("w"))
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cf")).persist()
+    vocab = (
+        words.groupBy("w").agg(F.count(F.lit(1)).alias("cf")).localCheckpoint()
+    )
     scored = hot_cold_dict_join(words, vocab, on="w", freq_col="cf")
     rare = F.sum(F.when(F.col("cf") < 5, 1).otherwise(0))
     n = F.count(F.lit(1))
@@ -1100,7 +1107,7 @@ def q63_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = _t(spark, sf_dir, "documents")
-    # persist: four consumers (budgets, bucket stats, full-bucket and
+    # checkpoint: four consumers (budgets, bucket stats, full-bucket and
     # boundary-bucket selections) would otherwise re-scan the corpus and
     # re-run the per-character text hashing — the dominant per-row cost —
     # once each (the q55/q58 multi-consumer discipline)
@@ -1108,7 +1115,7 @@ def q63_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source",
         F.size(tokenize(F.col("text"))).cast("long").alias("n"),
         poly_hash(F.col("text")).alias("h"),
-    ).withColumn("bucket", F.col("h") % 256).persist()
+    ).withColumn("bucket", F.col("h") % 256).localCheckpoint()
     budgets = base.groupBy("source").agg(F.sum("n").alias("tot")).select(
         "source", "tot",
         # try_cast: a source name without the srcNN numeric suffix takes
@@ -1200,9 +1207,9 @@ def q64_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents), a window would funnel each hot hash's entire occurrence
     list through one reducer and AQE cannot split windows — but it CAN
     split skewed join partitions, and the count aggregate partial-combines
-    the hot hash map-side.  ``spans`` is persisted for its two consumers
-    (count + mark join; ContextCleaner reclaims it when the plan is
-    released).
+    the hot hash map-side.  ``spans`` is localCheckpointed for its two
+    consumers (count + mark join); the checkpoint is reclaimed with the
+    returned frame, and no cached frame outlives the query.
     """
     d = _t(spark, sf_dir, "documents")
     n = _SPAN_N
@@ -1213,7 +1220,7 @@ def q64_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = th.select(
         "doc_id",
         _span_hash_col(n),
-    ).persist()
+    ).localCheckpoint()
     counts = spans.groupBy("h").agg(F.count(F.lit(1)).alias("__occ"))
     marked = spans.join(counts, "h")
     rep = F.sum(F.when(F.col("__occ") > 1, 1).otherwise(0))
@@ -1283,7 +1290,7 @@ def q91_span_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = th.select(
         "doc_id",
         _span_hash_col(n),
-    ).distinct().persist()
+    ).distinct().localCheckpoint()
     totals = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans")
     )
@@ -1396,7 +1403,7 @@ def q149_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").isNotNull(),
             F.struct(F.col("doc_id"), F.col("s.i").alias("i")),
         ).alias("k"),
-    ).persist()
+    ).localCheckpoint()
     dup = spans.groupBy("h").agg(
         F.count(F.lit(1)).alias("__c"), F.min("k").alias("__keeper")
     ).filter(F.col("__c") >= 2)
@@ -1561,12 +1568,12 @@ def q66_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE corpus-scale shuffle: collect_set dedups (source, h) occurrences
     # map-side, so no separate distinct() exchange is needed.  The collapsed
-    # table (one row per distinct span) is what persists — bounded by the
-    # span vocabulary, not the corpus — and feeds both consumers below.
+    # table (one row per distinct span) feeds both consumers below; it is
+    # not materialised: a persist measured no faster at sf0.1 (2.21 s vs
+    # 2.17 s without, 4 cores).
     bysrc = (
         spans.groupBy("h")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .persist()
     )
     # per-source distinct-span inventory, derived from the collapsed table:
     # row-local explode of bounded source sets + a sources-sized aggregate
@@ -1736,9 +1743,9 @@ def q69_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = words.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    # persist: consumed by dfq (vocabulary agg) AND as the fact side of the
-    # hot/cold join (which itself probes it twice: hot semi, cold anti)
-    tf = tf.persist()
+    # checkpoint: consumed by dfq (vocabulary agg) AND as the fact side of
+    # the hot/cold join (which itself probes it twice: hot semi, cold anti)
+    tf = tf.localCheckpoint()
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf_dim = dfq.crossJoin(F.broadcast(nd)).select(
         "term", "df", F.log(F.col("nd").cast("double") / F.col("df")).alias("idf")
@@ -1847,7 +1854,7 @@ def q70_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-document signals (normalized hash, token hashes,
     quality flags, sample bucket) are computed in one pass over the corpus
-    and persisted WITHOUT the raw text (the shuffle-facing frame carries
+    and pinned WITHOUT the raw text (the shuffle-facing frame carries
     hashes, booleans, and counts only — at 100 TB you would checkpoint
     this compact frame to parquet instead).  Four keyed exchanges follow,
     none carrying text: (1) winner-per-(hash, len) aggregate, (2) the
@@ -1858,6 +1865,10 @@ def q70_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per source.  Stage ordering (dedup -> quality -> decontam ->
     sample) is encoded in the nesting of the conditions, not in separate
     passes — adding a stage costs one conditional sum.
+
+    The funnel (one row per source) is localCheckpointed while the fact
+    frame is pinned, so the pin ends inside the call; checkpointing the
+    fact frame itself measured slower at sf0.1 (2.7 s vs 2.2 s, 4 cores).
     """
     d = _t(spark, sf_dir, "documents")
     base = d.select(
@@ -1892,7 +1903,7 @@ def q70_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "th", "tl_len", "n",
         F.coalesce(qual, F.lit(False)).alias("qual"),
         (F.col("th") % 100 < _Q70_SAMPLE_PCT).alias("samp"),
-    ).filter(F.col("doc_id") % 97 != 0).persist()
+    ).filter(F.col("doc_id") % 97 != 0)
     grams = base.select(
         "doc_id",
         F.explode(
@@ -1927,7 +1938,7 @@ def q70_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_q = keep_u & F.col("qual")
     keep_c = keep_q & ~F.col("contam")
     keep_s = keep_c & F.col("samp")
-    return flags.groupBy("source").agg(
+    funnel = flags.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_train"),
         F.sum(F.when(keep_u, 1).otherwise(0)).cast("long").alias("n_unique"),
         F.sum(F.when(keep_q, 1).otherwise(0)).cast("long").alias("n_quality"),
@@ -1936,6 +1947,8 @@ def q70_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(keep_s, F.col("n")).otherwise(0)).cast("long")
             .alias("tokens_sampled"),
     )
+    with persisted(facts):
+        return funnel.localCheckpoint()
 
 
 # --------------------------------------------------------------------------- #
@@ -2785,14 +2798,16 @@ def q106_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle document-frequency groupBy and the (prefix-shingle) bucket
     join — bucket sizes track shingle rarity, exactly why prefixes hold
     the RAREST shingles; verification intersects the two bounded
-    per-doc arrays row-locally.  The shingle and prefix tables persist
-    for the query's own multi-branch reuse (self-join + verification):
-    unpersisted, the per-char shingle hashing re-executes in every
-    branch — measured 103 s vs ~4 s at sf0.1."""
+    per-doc arrays row-locally.  The shingle table is localCheckpointed
+    for the query's own multi-branch reuse (prefix build + verification):
+    unmaterialised, the per-char shingle hashing re-executes in every
+    branch — measured 103 s vs ~4 s at sf0.1.  The prefix table is not
+    materialised: its self-join reads it twice, and checkpointing it too
+    measured slower at sf0.1."""
     from cosmo_spark.operators.dedup import shingle_table
 
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     ex = sh.select(F.col("__id").alias("doc_id"), F.explode("sh").alias("h"))
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
@@ -2812,7 +2827,7 @@ def q106_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(slice(s, 1, CAST(n - (4*n + 4) DIV 5 + 1 AS INT)),"
             " x -> x.h)"
         ).alias("pfx"),
-    ).select("doc_id", "n", F.explode("pfx").alias("h")).persist()
+    ).select("doc_id", "n", F.explode("pfx").alias("h"))
     cand = (
         pfx.alias("a")
         .join(pfx.alias("b"), "h")
@@ -2912,14 +2927,14 @@ def q164_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates are generated per (prefix shingle of A ×
     holder of that shingle) — probe prefixes hold each doc's RAREST
     shingles, so probes land in low-document-frequency buckets; the
-    shingle and prefix tables persist across the candidate and verify
+    shingle table is localCheckpointed across the candidate and verify
     branches (the q106 discipline).  Verification intersects the two
     bounded per-doc arrays row-locally."""
     from cosmo_spark.operators.dedup import shingle_table
 
     tn, td = _Q164_TAU_NUM, _Q164_TAU_DEN
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     ex = sh.select(F.col("__id").alias("doc_id"), F.explode("sh").alias("h"))
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     ordered = (
@@ -3334,7 +3349,8 @@ def _entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    # checkpointed: the returned pairs read it twice (signatures + verify)
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     mh = ngram_jaccard_pairs(
         d, "text", "doc_id",
         candidate_pairs=minhash_candidates(
@@ -3425,12 +3441,12 @@ def q165_incremental_containment(
       BATCH, not the corpus, exactly the q79 incremental shape.
 
     Verification is q164's row-local array-intersect over the two
-    persisted shingle sets; all threshold arithmetic integer."""
+    checkpointed shingle sets; all threshold arithmetic integer."""
     from cosmo_spark.operators.dedup import shingle_table
 
     tn, td = _Q164_TAU_NUM, _Q164_TAU_DEN
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     probe = sh.filter(F.col("__id") % 5 == 0)
     index = sh.filter(F.col("__id") % 5 != 0)
     ex_idx = index.select(
@@ -3566,7 +3582,7 @@ def q135_lsh_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cosmo_spark.operators.dedup import shingle_table
 
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
+    sh = shingle_table(d, "text", "doc_id", shingle_n=3).localCheckpoint()
     verified = ngram_jaccard_pairs(
         d, "text", "doc_id",
         candidate_pairs=minhash_candidates(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cosmo_spark.queries import register
-from cosmo_spark.session import tune_session
+from cosmo_spark.session import persisted, tune_session
 from cosmo_spark.sources.tables import load_table
 from cosmo_spark.functions.text import poly_hash, tokenize
 from cosmo_spark.queries.artifacts import resolve_vector_artifacts
@@ -101,10 +101,13 @@ def q75_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = spark.sql(
         f"SELECT * FROM VALUES {_ivf_centroids_spark()} AS t(bucket, centroid)"
     )
-    # two consumers (the a/b sides of the within-cluster self-join) — persist
-    # so assignment computes once; at 100 TB this frame is what you would
-    # checkpoint to parquet (SemDedup materializes cluster assignment too)
-    assigned = assign_buckets(e, centroids, "embedding", "vec_id").persist()
+    # two consumers (the a/b sides of the within-cluster self-join) —
+    # checkpoint so assignment computes once; at 100 TB this frame is what
+    # you would checkpoint to parquet (SemDedup materializes cluster
+    # assignment too)
+    assigned = assign_buckets(
+        e, centroids, "embedding", "vec_id"
+    ).localCheckpoint()
     # max_block: a hot k-means centroid is the canonical SemDedup skew
     # (near-duplicate mass collapses into one cluster) — the salted
     # triangular sub-blocking is an exact rewrite, so results are unchanged
@@ -283,9 +286,10 @@ def q78_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one corpus shuffle on (event_type, minute) with map-side
     partial aggregation; the hour and day shuffles move only minute/hour
-    bucket rows (~10⁴ per fact-table 10⁷).  The minute frame is persisted
-    for its two consumers (output + hour derivation); day reuses hour's
-    plan the same way.
+    bucket rows (~10⁴ per fact-table 10⁷).  The minute frame feeds two
+    consumers (output + hour derivation), and day reuses hour's plan the
+    same way; neither is materialised (a persist of both measured no
+    faster at sf0.1).
     """
     ev = _t(spark, sf_dir, "events")
     es = ev.select(
@@ -298,14 +302,12 @@ def q78_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     minute = (
         es.groupBy("event_type", F.expr("(s div 60) * 60").alias("bucket_s"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("cents").alias("sc"))
-        .persist()
     )
     hour = (
         minute.groupBy(
             "event_type", F.expr("(bucket_s div 3600) * 3600").alias("bucket_s")
         )
         .agg(F.sum("n_events").alias("n_events"), F.sum("sc").alias("sc"))
-        .persist()
     )
     day = hour.groupBy(
         "event_type", F.expr("(bucket_s div 86400) * 86400").alias("bucket_s")
@@ -661,14 +663,16 @@ def q83_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    sh = shingle_table(d, "text", "doc_id", shingle_n=3).persist()
-    cands = minhash_candidates(
-        d, "text", "doc_id", n_hashes=8, bands=4, shingle_n=3, shingles=sh
-    )
-    verified = ngram_jaccard_pairs(
-        d, "text", "doc_id", candidate_pairs=cands, shingles=sh
-    )
-    clusters = duplicate_clusters(verified.select("id_a", "id_b"))
+    # the shingle table feeds the signatures and the verify; the closure
+    # reads the verified pairs eagerly, so the pin ends with the call
+    with persisted(shingle_table(d, "text", "doc_id", shingle_n=3)) as sh:
+        cands = minhash_candidates(
+            d, "text", "doc_id", n_hashes=8, bands=4, shingle_n=3, shingles=sh
+        )
+        verified = ngram_jaccard_pairs(
+            d, "text", "doc_id", candidate_pairs=cands, shingles=sh
+        )
+        clusters = duplicate_clusters(verified.select("id_a", "id_b"))
     scored = clusters.join(
         d.select(F.col("doc_id").alias("id"), "n_chars"), "id"
     )
@@ -790,7 +794,7 @@ def q85_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokenize(F.col("text")).alias("toks"))
-    dl = toks.select("doc_id", F.size("toks").alias("dl")).persist()
+    dl = toks.select("doc_id", F.size("toks").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     )
@@ -799,7 +803,6 @@ def q85_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.filter(F.col("w").isin(*_BM25_TERMS))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     idf = (
         tf.groupBy("w")
@@ -2091,7 +2094,7 @@ def q153_model_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashed = cand.withColumn(
         "th_doc", poly_hash(normalize_text(F.col("text")))
-    ).persist()
+    ).localCheckpoint()
     reps = (
         hashed.filter(F.col("kept") == 1)
         .groupBy("th_doc")
@@ -2101,7 +2104,7 @@ def q153_model_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text", "kept",
         F.when(F.col("rep_id") == F.col("doc_id"), 1).otherwise(0)
         .alias("is_rep"),
-    ).persist()
+    ).localCheckpoint()
     # learned per-word token costs over the representatives' vocabulary
     # (q148 discipline: merge passes run vocabulary-sized, costs broadcast)
     rules = resolve_bpe_merges(spark, sf_dir)

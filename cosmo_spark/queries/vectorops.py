@@ -396,9 +396,9 @@ def q68_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle.  (2) per-label mu/sigma of the distance reduce the corpus
     again by partial aggregation to one row per label, broadcast back.
     (3) the z-filter is a map-side predicate.  The distance table (3
-    numeric cols) is persisted for its two consumers (stats + final
-    filter) so the cosine HOF fold runs once per vector — at 100 TB you
-    would swap the persist for a checkpoint-to-parquet of the same 3-column
+    numeric cols) is localCheckpointed for its two consumers (stats +
+    final filter) so the cosine HOF fold runs once per vector — at 100 TB
+    you would swap it for a checkpoint-to-parquet of the same 3-column
     frame; nothing else changes.
     """
     e = _t(spark, sf_dir, "embeddings").select(
@@ -417,7 +417,7 @@ def q68_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "label",
             (F.lit(1.0) - cosine_sim("v", "cv")).alias("dist"),
         )
-        .persist()
+        .localCheckpoint()
     )
     stats = d.groupBy("label").agg(
         F.avg("dist").alias("mu"), F.stddev_samp("dist").alias("sd")

@@ -14,7 +14,10 @@ Scale stance: these defaults are written for a real cluster (many executors,
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: Configs that are safe to apply to an already-running session at runtime.
 RUNTIME_CONF = {
@@ -80,3 +83,27 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # immutable in this deployment; defaults are acceptable
     return spark
+
+
+@contextmanager
+def persisted(*frames: DataFrame) -> Iterator:
+    """Pin ``frames`` for the body of a ``with`` block, then release them,
+    also when the body raises.
+
+    The one cache lifetime in this package.  A pin read by a lazily
+    returned frame cannot be scoped: such a frame is either recomputed
+    (ReusedExchange often shares the subplan anyway) or ``localCheckpoint``ed,
+    which cuts its lineage and is reclaimed with the frame.  A bare
+    ``persist()`` is never released by the ContextCleaner — the CacheManager
+    keeps it until ``unpersist``/``clearCache`` — and it serves every later
+    query with the same logical plan.
+
+    Yields the frame (one argument) or the tuple of frames.
+    """
+    try:
+        for df in frames:
+            df.persist()
+        yield frames[0] if len(frames) == 1 else frames
+    finally:
+        for df in frames:
+            df.unpersist()

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cosmo_spark.session import persisted
+
 
 def with_shard(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic content-keyed shard id: ``pmod(xxhash64(key), n)``."""
@@ -51,8 +53,7 @@ def write_sharded_jsonl(
     JSON-encoded row lengths — computed from the same expression the writer
     serializes, so it tracks real output size).
     """
-    sharded = with_shard(df, key_col, n_shards).persist()
-    try:
+    with persisted(with_shard(df, key_col, n_shards)) as sharded:
         writer = (
             sharded.repartition(n_shards, "shard")
             .write.mode("overwrite")
@@ -74,8 +75,6 @@ def write_sharded_jsonl(
             ).alias("approx_bytes"),
         )
         manifest.coalesce(1).write.mode("overwrite").parquet(path + "_manifest")
-    finally:
-        sharded.unpersist()
 
 
 def read_sharded_jsonl(
@@ -115,8 +114,7 @@ def write_sharded_columnar(
     consumers wants the columnar form."""
     if fmt not in ("orc", "parquet"):
         raise ValueError(f"fmt must be 'orc' or 'parquet', got {fmt!r}")
-    sharded = with_shard(df, key_col, n_shards).persist()
-    try:
+    with persisted(with_shard(df, key_col, n_shards)) as sharded:
         writer = (
             sharded.repartition(n_shards, "shard")
             .write.mode("overwrite")
@@ -133,8 +131,6 @@ def write_sharded_columnar(
             F.countDistinct(key_col).alias("n_docs"),
         )
         manifest.coalesce(1).write.mode("overwrite").parquet(path + "_manifest")
-    finally:
-        sharded.unpersist()
 
 
 def read_sharded_columnar(

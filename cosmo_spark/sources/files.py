@@ -257,12 +257,13 @@ def read_jsonl_quarantine(
         .json(path)
         .filter(F.col("_corrupt_record").isNotNull())
     )
-    # cache the quarantine channel (advice r7): a raw PERMISSIVE scan
+    # materialise the quarantine channel (advice r7): a raw PERMISSIVE scan
     # refuses natural calls like bad.count() once pruning leaves only the
-    # corrupt column (QUERY_ONLY_CORRUPT_RECORD_COLUMN); caching pins the
-    # full row set so every downstream shape plans.  The frame is
-    # breakage-sized (bad rows only), so the pin is bounded.
-    bad = bad.cache()
+    # corrupt column (QUERY_ONLY_CORRUPT_RECORD_COLUMN); a localCheckpoint
+    # cuts the plan at the full row set so every downstream shape plans.
+    # The frame is breakage-sized (bad rows only) and is reclaimed with
+    # the returned frame instead of staying pinned in the CacheManager.
+    bad = bad.localCheckpoint()
     if quarantine_path:
         bad.write.mode("append").parquet(quarantine_path)
     return clean, bad
@@ -295,9 +296,9 @@ def read_csv_quarantine(
         .csv(path)
         .filter(F.col("_corrupt_record").isNotNull())
     )
-    # same bounded cache as the JSONL twin: lifts the corrupt-only-column
-    # planning restriction so bad.count()/aggregates work directly
-    bad = bad.cache()
+    # same bounded checkpoint as the JSONL twin: lifts the corrupt-only-
+    # column planning restriction so bad.count()/aggregates work directly
+    bad = bad.localCheckpoint()
     if quarantine_path:
         bad.write.mode("append").parquet(quarantine_path)
     return clean, bad

@@ -74,6 +74,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cosmo_spark.session import persisted
+
 _MANIFEST = "_versions.json"
 
 #: crashed writers' tmp dirs and generations older than this are reaped
@@ -396,34 +398,30 @@ def merge_into_path(
     from cosmo_spark.operators.merge import _table_lock, merge_versioned
 
     os.makedirs(path, exist_ok=True)
-    if partition_col is not None:
-        updates = updates.persist()   # read twice: key probe + merge
-    try:
-        with _table_lock(spark, path.rstrip("/")) as guard:
-            doc = _read_manifest(path)
-            _claim_layout(path, doc, partition_col)
-            if partition_col is None:
-                affected = {""}
-            else:
-                affected = {
-                    r.k for r in updates.select(
-                        _key_expr(partition_col).alias("k")
-                    ).distinct().collect()
-                }
-                if not affected:
-                    return doc["current"] or 0
-            parts = _current_parts(doc, path)
-            current = _scan(
-                spark, path, [parts[k] for k in affected if k in parts]
-            )
-            merged = merge_versioned(current, updates, key_cols, version_col)
-            version = _stage_publish_locked(path, doc, merged, affected, guard)
-            if retain_versions is not None:
-                _vacuum_locked(path, doc, retain_versions, guard)
-            return version
-    finally:
-        if partition_col is not None:
-            updates.unpersist()
+    # a partitioned batch is read twice: the affected-key probe + the merge
+    pinned = (updates,) if partition_col is not None else ()
+    with persisted(*pinned), _table_lock(spark, path.rstrip("/")) as guard:
+        doc = _read_manifest(path)
+        _claim_layout(path, doc, partition_col)
+        if partition_col is None:
+            affected = {""}
+        else:
+            affected = {
+                r.k for r in updates.select(
+                    _key_expr(partition_col).alias("k")
+                ).distinct().collect()
+            }
+            if not affected:
+                return doc["current"] or 0
+        parts = _current_parts(doc, path)
+        current = _scan(
+            spark, path, [parts[k] for k in affected if k in parts]
+        )
+        merged = merge_versioned(current, updates, key_cols, version_col)
+        version = _stage_publish_locked(path, doc, merged, affected, guard)
+        if retain_versions is not None:
+            _vacuum_locked(path, doc, retain_versions, guard)
+        return version
 
 
 def read_snapshot(

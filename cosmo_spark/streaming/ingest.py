@@ -21,6 +21,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from cosmo_spark.operators.merge import merge_into_path
+from cosmo_spark.session import persisted
 
 
 def start_catch_up(
@@ -131,11 +132,13 @@ def stream_ingest_dedup(
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
-        batch_df = batch_df.persist()
-        sh_new = kept = None
-        try:
-            sh_new = shingle_table(batch_df, text_col, id_col, shingle_n).persist()
+        # a catch-up run calls this once per micro-batch: every pin is
+        # scoped to the batch, or dead cached shingle tables accumulate in
+        # executor storage for the life of the stream
+        sh_new = shingle_table(batch_df, text_col, id_col, shingle_n)
+        with persisted(batch_df, sh_new):
             b_new = band_table(sh_new, n_hashes, bands)
+            kept = batch_df
             if os.path.exists(bands_path):
                 b_old = ss.read.parquet(bands_path)
                 sh_old = ss.read.parquet(shingles_path)
@@ -157,22 +160,14 @@ def stream_ingest_dedup(
                     .select(F.col("id_a").alias(id_col))
                     .distinct()
                 )
-                kept = batch_df.join(dups, id_col, "left_anti").persist()
-            else:
-                kept = batch_df.persist()
-            kept.write.mode("append").parquet(corpus_path)
-            kept_ids = kept.select(F.col(id_col).alias("__id"))
-            sh_kept = sh_new.join(kept_ids, "__id")
-            band_table(sh_kept, n_hashes, bands).write.mode("append").parquet(
-                bands_path
-            )
-            sh_kept.write.mode("append").parquet(shingles_path)
-        finally:
-            # a catch-up run calls this once per micro-batch — unpersist
-            # everything, not just the batch frame, or dead cached shingle
-            # tables accumulate in executor storage between GC cycles
-            for frame in (batch_df, sh_new, kept):
-                if frame is not None:
-                    frame.unpersist()
+                kept = batch_df.join(dups, id_col, "left_anti")
+            with persisted(kept):
+                kept.write.mode("append").parquet(corpus_path)
+                kept_ids = kept.select(F.col(id_col).alias("__id"))
+                sh_kept = sh_new.join(kept_ids, "__id")
+                band_table(sh_kept, n_hashes, bands).write.mode("append").parquet(
+                    bands_path
+                )
+                sh_kept.write.mode("append").parquet(shingles_path)
 
     return start_catch_up(stream, dedup_batch, checkpoint_dir)

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cosmo_spark.session import persisted
+
 #: one row per arrival: accepted (dup_of null) or matched to an earlier id
 OUT_SCHEMA = "id STRING, dup_of STRING, cos_sim DOUBLE, code BIGINT"
 STATE_SCHEMA = "ids ARRAY<STRING>, vecs ARRAY<ARRAY<DOUBLE>>"
@@ -1029,9 +1031,8 @@ def make_media_upsert(
                 "fp_lo BIGINT, dup_of STRING, hamming INT, code BIGINT, "
                 "status STRING, rank BIGINT",
             )
-            .persist()
         )
-        try:
+        with persisted(verdicts):
             out = verdicts.select(
                 "media_id", "content_hash", "dup_of", "hamming", "code",
                 "status",
@@ -1050,8 +1051,6 @@ def make_media_upsert(
             newly.write.mode("overwrite").parquet(
                 os.path.join(state_path, f"batch-{int(batch_id)}")
             )
-        finally:
-            verdicts.unpersist()
         if compact_every is not None:
             from cosmo_spark.streaming import logio
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cosmo_spark.session import persisted
 from cosmo_spark.streaming.ingest import start_catch_up
 
 
@@ -139,18 +140,21 @@ def stream_rollup_cascade(
             )
             .groupBy("event_type", "bucket_s")
             .agg(F.count(F.lit(1)).alias("n_events"), F.sum("cents").alias("sc"))
-            .persist()
         )
-        additive_merge(ss, grain_path("minute"), mins, ["event_type", "bucket_s"])
-        touched_h = mins.select(
-            "event_type", F.expr("(bucket_s div 3600) * 3600").alias("bucket_s")
-        )
-        rederive(ss, grain_path("minute"), grain_path("hour"), 3600, touched_h)
-        touched_d = mins.select(
-            "event_type", F.expr("(bucket_s div 86400) * 86400").alias("bucket_s")
-        )
-        rederive(ss, grain_path("hour"), grain_path("day"), 86400, touched_d)
-        mins.unpersist()
+        with persisted(mins):
+            additive_merge(
+                ss, grain_path("minute"), mins, ["event_type", "bucket_s"]
+            )
+            touched_h = mins.select(
+                "event_type",
+                F.expr("(bucket_s div 3600) * 3600").alias("bucket_s"),
+            )
+            rederive(ss, grain_path("minute"), grain_path("hour"), 3600, touched_h)
+            touched_d = mins.select(
+                "event_type",
+                F.expr("(bucket_s div 86400) * 86400").alias("bucket_s"),
+            )
+            rederive(ss, grain_path("hour"), grain_path("day"), 86400, touched_d)
 
     stream = (
         spark.readStream.format(fmt)

@@ -6,6 +6,8 @@ regression this file catches (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from cosmo_spark.plans.explain import (
@@ -28,6 +30,29 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def qs():
     return all_queries()
+
+
+@pytest.fixture
+def query_frames(monkeypatch):
+    """``query_frames(build)`` -> the frame ``build()`` returns plus every
+    frame it localCheckpointed on the way.  A checkpoint cuts the lineage,
+    so the plans of those eager jobs appear only in the recorded frames."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def frames(build):
+        seen = []
+        orig = DataFrame.localCheckpoint
+
+        def spy(self, *args, **kwargs):
+            seen.append(self)
+            return orig(self, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "localCheckpoint", spy)
+            df = build()
+        return [df, *seen]
+
+    return frames
 
 
 def test_q01_filter_pushed_and_columns_pruned(spark, qs):
@@ -131,13 +156,17 @@ def test_q58_vocab_join_hot_keys_broadcast(spark, qs):
     assert "LeftAnti" in plan  # the cold-tail split is in the plan
 
 
-def test_q58_vocab_persisted_not_recomputed(spark, qs):
+def test_q58_vocab_materialised_once(spark, qs):
     """The vocab aggregation feeds three consumers inside the hot/cold join;
-    the persist must surface as InMemoryTableScan nodes so the corpus-scale
-    aggregation is not re-planned per branch."""
+    it is materialised once (localCheckpoint), so every branch reads the
+    vocab table (``w``, ``cf``) from a checkpoint scan and the corpus-scale
+    count-by-word aggregation is not re-planned in any branch: the only
+    aggregation left in the query is the per-document one."""
     df = qs["q58_rare_word_score"].spark_fn(spark, SF)
     plan = physical_plan(df)
-    assert "InMemoryTableScan" in plan
+    assert re.search(r"Scan ExistingRDD[^\n]*\nOutput \[2\]: \[w#\d+, cf#", plan)
+    agg_keys = re.findall(r"^Keys \[\d+\]: \[([^\]]*)\]", plan, re.M)
+    assert agg_keys and all(k.startswith("doc_id#") for k in agg_keys), agg_keys
 
 
 def test_q59_eval_grams_broadcast_no_text_in_shuffle(spark, qs):
@@ -254,13 +283,14 @@ def test_q69_idf_join_hot_keys_broadcast_no_rank_window(spark, qs):
     assert "partial_count" in plan
 
 
-def test_q70_no_text_in_any_exchange(spark, qs):
+def test_q70_no_text_in_any_exchange(spark, qs, query_frames):
     """The corpus-build funnel's shuffles must carry hashes/flags/counts
-    only — the raw document text must never cross an exchange."""
+    only — the raw document text must never cross an exchange (of the
+    returned frame or of any frame the query checkpoints)."""
     import re
 
-    df = qs["q70_corpus_build"].spark_fn(spark, SF)
-    plan = physical_plan(df)
+    frames = query_frames(lambda: qs["q70_corpus_build"].spark_fn(spark, SF))
+    plan = "\n".join(physical_plan(f) for f in frames)
     # formatted plan: each Exchange node is followed by an Input [..] line
     for m in re.finditer(r"\(\d+\) Exchange\n(Input \[[^\n]*)", plan):
         assert "text#" not in m.group(1), m.group(1)
@@ -326,11 +356,12 @@ def test_q76_pair_counts_aggregate_vocab_first(spark, qs):
     assert any("freq" in g for g in gen_inputs), gen_inputs
 
 
-def test_q75_assignment_is_broadcast_maxby_not_window(spark, qs):
+def test_q75_assignment_is_broadcast_maxby_not_window(spark, qs, query_frames):
     # nearest-centroid assignment: broadcast join + partial max_by — the
-    # corpus must never hit a per-vector row_number window
-    df = qs["q75_semantic_dedup"].spark_fn(spark, SF)
-    plan = physical_plan(df)
+    # corpus must never hit a per-vector row_number window (the assignment
+    # is checkpointed, so its plan is one of the recorded frames)
+    frames = query_frames(lambda: qs["q75_semantic_dedup"].spark_fn(spark, SF))
+    plan = "\n".join(physical_plan(f) for f in frames)
     assert "BroadcastNestedLoopJoin" in plan and "max_by" in plan
     assert "Window" not in plan
 
@@ -445,20 +476,21 @@ def test_q88_q90_query_at_rest_index_not_reencode(spark, qs):
         assert "__c0_0" not in plan, f"{name}: corpus encode on query path"
 
 
-def test_no_unbounded_global_windows_anywhere(spark, qs):
+def test_no_unbounded_global_windows_anywhere(spark, qs, query_frames):
     """Catalog-wide SCALE.md contract: every global (no-partition) window
     must consume a pre-aggregated/bounded input — O(aggregated), never
-    O(corpus).  Covers all ~98 queries so a regression in ANY of them
-    fails here by name instead of hiding in WindowExec warning noise."""
+    O(corpus).  Covers all ~98 queries (and every frame they checkpoint)
+    so a regression in ANY of them fails here by name instead of hiding in
+    WindowExec warning noise."""
     from cosmo_spark.plans.explain import unbounded_global_windows
 
     bad = {}
     for name, q in qs.items():
         try:
-            df = q.spark_fn(spark, SF)
+            frames = query_frames(lambda: q.spark_fn(spark, SF))
         except Exception:
             continue  # construction errors are other tests' business
-        v = unbounded_global_windows(df)
+        v = [w for f in frames for w in unbounded_global_windows(f)]
         if v:
             bad[name] = v
     assert not bad, bad
@@ -520,14 +552,16 @@ def test_q100_pagerank_iterations_truncate_lineage(spark, qs):
     assert "FileScan parquet" not in plan and "Scan parquet" not in plan
 
 
-def test_q116_triangle_joins_are_hash_equi_joins(spark, qs):
+def test_q116_triangle_joins_are_hash_equi_joins(spark, qs, query_frames):
     """The wedge enumeration and closing joins must be hash/sort-merge
     EQUI-joins on node keys — a BroadcastNestedLoop or CartesianProduct
     here means the orientation inequality leaked into the join keys and
     the plan degenerated to all-pairs.  The DOULION sampling filter must
-    also reach the pairs self-join (pre-distinct), not run post-hoc."""
-    df = qs["q116_triangle_count"].spark_fn(spark, SF)
-    plan = physical_plan(df)
+    also reach the pairs self-join (pre-distinct), not run post-hoc.  The
+    edge, degree and oriented tables are checkpointed, so their plans are
+    among the recorded frames."""
+    frames = query_frames(lambda: qs["q116_triangle_count"].spark_fn(spark, SF))
+    plan = "\n".join(physical_plan(f) for f in frames)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     # sampling predicate fused into the lineitem self-join condition
@@ -552,7 +586,7 @@ def test_q122_fusion_join_no_corpus_window(spark, qs):
     assert len(bnlj) <= 1, plan
 
 
-def test_no_cartesian_product_anywhere(spark, qs):
+def test_no_cartesian_product_anywhere(spark, qs, query_frames):
     """Catalog-wide join-shape contract (the window gate's sibling): a
     CartesianProduct node means BOTH sides of a cross join were too big
     to broadcast — at corpus scale that is quadratic I/O no matter what
@@ -560,16 +594,17 @@ def test_no_cartesian_product_anywhere(spark, qs):
     broadcast one (global-stat scalars cross-joined back, the q32/q87
     brute-force primitives), which plans as BroadcastNestedLoopJoin;
     surveyed at round 7: 23 queries carry BNLJ, zero carry
-    CartesianProduct — this keeps it that way, failing by query name."""
+    CartesianProduct — this keeps it that way, failing by query name
+    (every frame a query checkpoints is checked too)."""
     import re
 
     bad = {}
     for name, q in qs.items():
         try:
-            df = q.spark_fn(spark, SF)
+            frames = query_frames(lambda: q.spark_fn(spark, SF))
         except Exception:
             continue  # construction errors are other tests' business
-        plan = physical_plan(df)
+        plan = "\n".join(physical_plan(f) for f in frames)
         n = len(re.findall(r"^\(\d+\) CartesianProduct", plan, re.M))
         if n:
             bad[name] = n
