@@ -22,6 +22,28 @@ def physical_plan(df: DataFrame) -> str:
     )
 
 
+def query_frames(build) -> list[DataFrame]:
+    """``build()``'s frame plus every frame it ``localCheckpoint``ed on
+    the way.  A checkpoint cuts the lineage, so the stages of those eager
+    jobs appear only in the recorded frames' plans, never in the
+    returned frame's."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
+    seen: list[DataFrame] = []
+    orig = ClassicFrame.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        seen.append(self)
+        return orig(self, *args, **kwargs)
+
+    ClassicFrame.localCheckpoint = record
+    try:
+        df = build()
+    finally:
+        ClassicFrame.localCheckpoint = orig
+    return [df, *seen]
+
+
 def executed_plan(df: DataFrame) -> str:
     """Plan string AFTER execution — under AQE the final plan (with
     WholeStageCodegen annotations and materialized query stages) only exists

@@ -604,9 +604,10 @@ def q107_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Register construction and the estimator live in operators/sketches.py,
     shared verbatim with the STREAMING register maintainer
-    (streaming/sketches.stream_hll_registers) — the same state this query
-    computes in one batch is maintained incrementally by merge-by-max
-    there."""
+    (streaming/sketches.stream_hll_registers_windowed, read back by
+    hll_distinct_estimates_windowed) — the same state this query computes
+    in one batch is maintained incrementally, per event-time window, by
+    merge-by-max there."""
     from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import hll_estimate, hll_registers
 

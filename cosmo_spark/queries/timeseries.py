@@ -1302,9 +1302,10 @@ def q143_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per octave (operators/sketches HDR geometry — integer bit arithmetic,
     exact-region below 64), per-(type, bucket) counts merge by SUM, and
     p50/p90/p99 read off the cumulative bucket table within a 1/64
-    relative band.  The same counts stream incrementally
-    (streaming/sketches.stream_hdr_buckets) — this query is the batch
-    twin that certifies the geometry.
+    relative band.  The same counts stream incrementally, per event-time
+    window (streaming/sketches.stream_hdr_buckets_windowed, read back by
+    hdr_quantile_estimates_windowed) — this query is the batch twin that
+    certifies the geometry.
 
     Scale shape: ONE map-side-combining (type, bucket) count — state is
     ≤ ~4k buckets per type no matter how many rows — then window + joins
@@ -1387,7 +1388,6 @@ def ensure_hdr_window_log(spark: SparkSession, sf_dir: str) -> str:
     q = stream_hdr_buckets_windowed(
         _normalize_ts(stream), "event_type", "value", "ts",
         bucket_path=log, checkpoint_dir=os.path.join(base, "ckpt"),
-        bucket="day",
     )
     q.awaitTermination()
     open(marker, "w").close()
@@ -1505,7 +1505,6 @@ def ensure_hll_window_log(spark: SparkSession, sf_dir: str) -> str:
     q = stream_hll_registers_windowed(
         prepared, "event_type", "user_s", "ts",
         register_path=log, checkpoint_dir=os.path.join(base, "ckpt"),
-        bucket="day",
     )
     q.awaitTermination()
     open(marker, "w").close()
@@ -1729,7 +1728,6 @@ def ensure_cms_window_log(spark: SparkSession, sf_dir: str) -> str:
     q = stream_cms_counters_windowed(
         prepared, "event_type", "ts",
         counter_path=log, checkpoint_dir=os.path.join(base, "ckpt"),
-        bucket="day",
     )
     q.awaitTermination()
     open(marker, "w").close()
@@ -1826,8 +1824,7 @@ def q152_cms_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------- #
 
 def _kmv_window_log_dir(sf_dir: str) -> str:
-    # "kmv_v": value-mode logs (whole-id hashing) are a different artifact
-    # from any token-mode kmv log — never share a directory with one
+    # "kmv_v": the maintainer hashes each value whole
     return _window_log_dir(sf_dir, "kmv_v")
 
 
@@ -1861,7 +1858,6 @@ def ensure_kmv_window_log(spark: SparkSession, sf_dir: str) -> str:
     q = stream_kmv_values_windowed(
         prepared, "event_type", "user_s", "ts",
         value_path=log, checkpoint_dir=os.path.join(base, "ckpt"),
-        bucket="day", tokenize_values=False,
     )
     q.awaitTermination()
     open(marker, "w").close()
@@ -2290,7 +2286,6 @@ def ensure_hll_quarantine_log(spark: SparkSession, sf_dir: str) -> str:
         stream_hll_registers_windowed(
             stream, "event_type", "user_s", "ts",
             register_path=log, checkpoint_dir=os.path.join(base, "ckpt"),
-            bucket="day",
         ).awaitTermination()
 
     cols = ["event_type", "ts", F.col("user_id").cast("string").alias("user_s")]

@@ -300,15 +300,12 @@ def replace_file(src: str, dst: str) -> None:
 
 
 def read_json(path: str) -> dict | None:
-    """:func:`read_text` + JSON parse; a torn local write or half-copied
-    backup reads as None (the 'no manifest' protocol state)."""
+    """:func:`read_text` + JSON parse; None only when missing.  Every
+    marker read through here is published by an atomic swap, so an
+    unparseable one is damage, not a protocol state: it raises rather
+    than reading as 'no manifest' / 'no horizon'."""
     text = read_text(path)
-    if text is None:
-        return None
-    try:
-        return json.loads(text)
-    except ValueError:
-        return None
+    return None if text is None else json.loads(text)
 
 
 def write_json_atomic(path: str, doc: dict) -> None:
@@ -418,7 +415,18 @@ def publish_dir(tmp: str, dest: str) -> None:
     copy; a crash leaves marker+partial-dest, which
     :func:`clear_crashed_publish` recognizes as OURS to delete — an
     existing directory without a marker is never touched (it may be a
-    real log)."""
+    real log).
+
+    Every staged file and directory under ``tmp`` is fsynced first
+    (where fsync means anything — see :func:`fsync_file`): a power loss
+    shortly after the publish could otherwise leave ``dest`` present with
+    torn data blocks."""
+    lp = local_path(tmp)
+    if lp is not None:
+        for d, _, files in os.walk(lp, topdown=False):
+            for n in files:
+                _os_fsync_file(os.path.join(d, n))
+            _os_fsync_dir(d)
     if rename_is_atomic(dest):
         rename(tmp, dest)
         fsync_dir(os.path.dirname(dest.rstrip("/")) or ".")

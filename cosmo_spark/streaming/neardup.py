@@ -528,22 +528,10 @@ def _keeper_read_manifest(path: str):
 
     from cosmo_spark.streaming import logio
 
-    # torn write of the manifest itself cannot happen (atomic swap), but
-    # a half-copied backup dir should read as "no manifest" — read_json
-    # maps unparseable to None
+    # a torn manifest cannot happen (atomic swap), so an unparseable one
+    # raises: read as "no manifest" it would list the consumed dirs AND
+    # the compact dir, double-counting every folded row
     return logio.read_json(os.path.join(path, _KEEPER_MANIFEST))
-
-
-def _keeper_phase(doc: dict, names: list[str]) -> str:
-    """The compaction's protocol phase.  Manifests carry an explicit
-    ``phase`` since the logio port (object stores materialize the compact
-    dir file-by-file, so dir-existence cannot mean "committed" there);
-    pre-phase manifests — only possible on rename-atomic schemes — infer
-    it the old way: final listed ⇒ the atomic rename happened."""
-    phase = doc.get("phase")
-    if phase is None:
-        phase = "committed" if doc["final"] in names else "prepared"
-    return phase
 
 
 def _keeper_live_dirs(path: str) -> list[str]:
@@ -576,7 +564,7 @@ def _keeper_live_dirs(path: str) -> list[str]:
             if all(logio.is_dir(os.path.join(path, d)) for d in names):
                 return [os.path.join(path, d) for d in names]
             continue
-        if _keeper_phase(doc, names) == "committed":
+        if doc["phase"] == "committed":
             consumed = set(doc["consumed"])
             names = [d for d in names if d not in consumed]
         else:
@@ -619,8 +607,7 @@ def _recover_keeper_compaction(path: str) -> None:
             if d.startswith("_compact-tmp-"):
                 logio.rmtree(os.path.join(path, d))
         return
-    names = logio.list_names(path)
-    if _keeper_phase(doc, names) == "committed":
+    if doc["phase"] == "committed":
         # same verified-gone rule as the happy path (r12 advice): the
         # manifest may only drop once no consumed dir can double-count
         for name in doc["consumed"]:
@@ -829,14 +816,6 @@ def rebuild_keeper_log(
             spark.createDataFrame([], schema).write.mode(
                 "overwrite"
             ).parquet(os.path.join(tmp, f"compact-{uuid.uuid4().hex[:12]}"))
-        # the _rotate_log durability rule: staged data blocks reach disk
-        # before the publish makes them the log of record
-        for d in logio.list_names(tmp):
-            sub = os.path.join(tmp, d)
-            for n in logio.list_names(sub):
-                logio.fsync_file(os.path.join(sub, n))
-            logio.fsync_dir(sub)
-        logio.fsync_dir(tmp)
         logio.publish_dir(tmp, dest_path)
     finally:
         logio.rmtree(tmp)

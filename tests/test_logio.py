@@ -94,12 +94,33 @@ def test_publish_dir_atomic_and_marker_branches(spark, tmp_path, monkeypatch):
     base = str(tmp_path)
     uri = "file://" + base
 
-    # atomic branch: plain rename
-    os.makedirs(base + "/stage-a")
-    with open(base + "/stage-a/part", "w") as fh:
-        fh.write("a")
-    logio.publish_dir(uri + "/stage-a", uri + "/final-a")
+    # atomic branch: plain rename — and every staged file, nested ones
+    # included, reaches disk BEFORE the rename publishes it
+    os.makedirs(base + "/stage-a/sub")
+    staged = [base + "/stage-a/part", base + "/stage-a/sub/nested"]
+    for f in staged:
+        with open(f, "w") as fh:
+            fh.write("a")
+    events = []
+    real_fsync, real_rename = logio._os_fsync_file, logio.rename
+
+    def fsync_spy(lp):
+        events.append(("fsync", lp))
+        real_fsync(lp)
+
+    def rename_spy(src, dst):
+        events.append(("rename", src))
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(logio, "_os_fsync_file", fsync_spy)
+        m.setattr(logio, "rename", rename_spy)
+        logio.publish_dir(uri + "/stage-a", uri + "/final-a")
+    renamed_at = events.index(("rename", uri + "/stage-a"))
+    assert {lp for op, lp in events[:renamed_at] if op == "fsync"} \
+        >= set(staged)
     assert os.path.isfile(base + "/final-a/part")
+    assert os.path.isfile(base + "/final-a/sub/nested")
     assert not logio.publish_in_flight(uri + "/final-a")
 
     # marker branch (object-store protocol over a real local Hadoop FS)
@@ -159,38 +180,51 @@ def test_object_store_swap_branches(spark, tmp_path, monkeypatch):
 
 
 def test_sketch_rotation_through_file_scheme(spark, tmp_path):
-    """Append → read → compact → read a real HLL register log where every
-    path the rotation touches is a ``file:`` URI — the full manifest
-    protocol (stage, prepared, move-in, committed, cleanup) through the
-    Hadoop FS branch."""
+    """Append → read → compact → read a real windowed HLL register log
+    where every path the rotation touches is a ``file:`` URI — the
+    horizon marker and the full manifest protocol (stage, prepared,
+    move-in, committed, cleanup) through the Hadoop FS branch."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
     from cosmo_spark.operators.sketches import hll_registers
     from cosmo_spark.streaming.sketches import (
         _MANIFEST,
-        compact_hll_registers,
-        hll_distinct_estimates,
+        expire_windows,
+        hll_distinct_estimates_windowed,
+        read_eviction_horizon,
     )
 
     base = str(tmp_path / "hll-log")
     uri = "file://" + base
+    t0 = dt.datetime(2024, 1, 1)
     src = spark.createDataFrame(
-        [(f"k{i % 3}", f"v{i}") for i in range(300)], "key STRING, val STRING"
+        [(f"k{i % 3}", t0 + dt.timedelta(days=i % 2), f"v{i}")
+         for i in range(300)],
+        "key STRING, win TIMESTAMP, val STRING",
     )
-    regs = hll_registers(src, ["key"], "val")
+    regs = hll_registers(src, ["key", "win"], "val") \
+        .select("key", "win", "bucket", "rho")
     for _ in range(3):                      # three append generations
         regs.write.mode("append").parquet(uri)
-    before = {
-        tuple(r)[:-1]: tuple(r)[-1]
-        for r in hll_distinct_estimates(spark, uri).collect()
-    }
+
+    def estimates():
+        return {
+            tuple(r)[:-1]: tuple(r)[-1]
+            for r in hll_distinct_estimates_windowed(spark, uri).collect()
+        }
+
+    before = estimates()
     assert len(before) == 3
 
-    compact_hll_registers(spark, uri)
-    after = {
-        tuple(r)[:-1]: tuple(r)[-1]
-        for r in hll_distinct_estimates(spark, uri).collect()
-    }
+    # a horizon at the earliest window drops nothing: a pure compaction
+    expire_windows(spark, uri, "hll", older_than=t0)
+    assert read_eviction_horizon(uri) == t0
+    after = estimates()
     assert after == before                  # merge algebra: bit-identical
     assert not os.path.exists(os.path.join(base, _MANIFEST))
+    assert spark.read.parquet(uri).filter(F.col("win") < t0).count() == 0
     # physically compacted: one rotation generation left
     parts = [n for n in os.listdir(base) if n.endswith(".parquet")]
     assert parts and all(n.startswith("rotated-") for n in parts)
@@ -330,6 +364,56 @@ def test_rebuild_log_publish_through_file_scheme(spark, tmp_path):
             spark, src, "file://" + dest2_base, "hll",
             t0 + dt.timedelta(hours=1),
         )
+
+
+def test_damaged_horizon_marker_raises(tmp_path):
+    """The eviction horizon is published by an atomic swap, so a marker
+    that does not parse is damage.  Read as "no horizon" it would switch
+    the late-data quarantine off and let evicted windows be recreated —
+    it must raise instead."""
+    from cosmo_spark.streaming.sketches import read_eviction_horizon
+
+    log = tmp_path / "log"
+    log.mkdir()
+    marker = log / "_eviction_horizon"
+    marker.write_text('{"older_than": "2024-01-')          # torn JSON
+    with pytest.raises(ValueError):
+        read_eviction_horizon(str(log))
+    marker.write_text('{"older_than": "not a time"}')
+    with pytest.raises(ValueError):
+        read_eviction_horizon(str(log))
+    marker.write_text("{}")
+    with pytest.raises(KeyError):
+        read_eviction_horizon(str(log))
+
+
+def test_damaged_keeper_manifest_raises(tmp_path):
+    """A keeper compaction manifest is published by an atomic swap, so
+    one that does not parse is damage.  Read as "no manifest" the reader
+    would list the consumed dirs AND the compact dir, double-counting
+    every folded row — listing and recovery must raise instead."""
+    from cosmo_spark.streaming.neardup import (
+        _KEEPER_MANIFEST,
+        _keeper_live_dirs,
+        _recover_keeper_compaction,
+    )
+
+    base = tmp_path / "state"
+    for d in ("batch-0", "batch-1", "batch-2", "compact-t9"):
+        (base / d).mkdir(parents=True)
+    (base / _KEEPER_MANIFEST).write_text('{"phase": "commit')
+    with pytest.raises(ValueError):
+        _keeper_live_dirs(str(base))
+    with pytest.raises(ValueError):
+        _recover_keeper_compaction(str(base))
+    assert (base / "compact-t9").is_dir() and (base / "batch-0").is_dir()
+    # a manifest without its phase is refused, not inferred
+    (base / _KEEPER_MANIFEST).write_text(json.dumps(
+        {"consumed": ["batch-0", "batch-1"], "final": "compact-t9",
+         "tmp": "_compact-tmp-t9"}
+    ))
+    with pytest.raises(KeyError):
+        _keeper_live_dirs(str(base))
 
 
 def test_media_fp_store_compaction_through_file_scheme(spark, tmp_path):

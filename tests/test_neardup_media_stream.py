@@ -513,7 +513,7 @@ def test_media_keeper_compaction_crash_recovery(spark, tmp_path, store):
 
     # window 1: crash AFTER the manifest, BEFORE the rename
     with open(os.path.join(state, _KEEPER_MANIFEST), "w") as fh:
-        json.dump(doc, fh)
+        json.dump({**doc, "phase": "prepared"}, fh)
     assert _acc_key(spark, state) == before    # reader: consumed still live
     _recover_keeper_compaction(state)          # rolls back
     assert not os.path.exists(os.path.join(state, tmp_name))
@@ -524,9 +524,9 @@ def test_media_keeper_compaction_crash_recovery(spark, tmp_path, store):
     spark.read.schema(MEDIA_ACCEPT_SCHEMA).parquet(
         *[os.path.join(state, d) for d in consumed]
     ).write.mode("overwrite").parquet(os.path.join(state, tmp_name))
-    with open(os.path.join(state, _KEEPER_MANIFEST), "w") as fh:
-        json.dump(doc, fh)
     os.rename(os.path.join(state, tmp_name), os.path.join(state, final))
+    with open(os.path.join(state, _KEEPER_MANIFEST), "w") as fh:
+        json.dump({**doc, "phase": "committed"}, fh)
     assert _acc_key(spark, state) == before    # reader: consumed skipped
     _recover_keeper_compaction(state)          # completes
     for d in consumed:

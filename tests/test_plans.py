@@ -10,6 +10,7 @@ import re
 
 import pytest
 
+from cosmo_spark.plans import explain
 from cosmo_spark.plans.explain import (
     executed_plan,
     physical_plan,
@@ -33,26 +34,11 @@ def qs():
 
 
 @pytest.fixture
-def query_frames(monkeypatch):
+def query_frames():
     """``query_frames(build)`` -> the frame ``build()`` returns plus every
-    frame it localCheckpointed on the way.  A checkpoint cuts the lineage,
-    so the plans of those eager jobs appear only in the recorded frames."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    def frames(build):
-        seen = []
-        orig = DataFrame.localCheckpoint
-
-        def spy(self, *args, **kwargs):
-            seen.append(self)
-            return orig(self, *args, **kwargs)
-
-        with monkeypatch.context() as m:
-            m.setattr(DataFrame, "localCheckpoint", spy)
-            df = build()
-        return [df, *seen]
-
-    return frames
+    frame it localCheckpointed on the way (the recorder
+    ``tools/plan_report.py`` counts with too)."""
+    return explain.query_frames
 
 
 def test_q01_filter_pushed_and_columns_pruned(spark, qs):

@@ -3,7 +3,10 @@
 The old compaction rotated append logs with append-then-remove; for
 Count-Min's ADDITIVE counters a crash between the two steps double-counts
 every consumed snapshot on restart.  The r8 manifest protocol
-(streaming/sketches.py `_rotate_log`) must make ANY crash point harmless:
+(streaming/sketches.py `_rotate_log`) must make ANY crash point harmless.
+The rotation's one entry point is `expire_windows`; every compaction
+here passes a horizon at the earliest window (`EPOCH`), so it drops
+nothing and only rewrites the log to its merged minimum:
 
   * the sweep tests kill the rotation at EVERY file-operation boundary
     (each `_fs_replace`, each `_fs_remove`) in turn, and after every kill
@@ -16,8 +19,9 @@ every consumed snapshot on restart.  The r8 manifest protocol
     log, appends a new micro-batch, and asserts the final counters equal
     q108's batch pipeline over all documents.
 
-All three merge algebras are swept: max (HLL), addition (CMS — the one
-that can double-count), set-union (KMV).
+All four sketches are swept: max (HLL), addition (CMS and HDR — the ones
+that can double-count), set-union (KMV).  The logs spread their batches
+over two event-time windows, so every read merges across windows.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import glob
 import json
 import os
 import shutil
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,6 +41,18 @@ from cosmo_spark.streaming import sketches as sk
 # the driver's verify completes inside its window (r13 verdict #7); run via
 # `pytest -m slow` or the full suite via `pytest --override-ini addopts= tests/`
 pytestmark = pytest.mark.slow
+
+#: the logs' windows; a horizon at EPOCH expires nothing
+EPOCH = datetime(2024, 1, 1)
+WINS = (EPOCH, datetime(2024, 1, 2))
+
+
+def _win(i: int):
+    return F.lit(WINS[i % len(WINS)]).alias("win")
+
+
+def _compact(spark, kind: str):
+    return lambda p: sk.expire_windows(spark, p, kind, older_than=EPOCH)
 
 
 class _Kill(RuntimeError):
@@ -131,6 +148,25 @@ _CMS_BATCHES = [
 ]
 
 
+def _cms_append(spark, path: str, bid: int, texts) -> None:
+    """One micro-batch's counter generation, as the windowed maintainer's
+    foreachBatch appends it.  Batches pair up per window (0 and 1 share
+    the first), so the fold of committed batches has cells to merge."""
+    from cosmo_spark.operators.sketches import cms_counters
+
+    cms_counters(_cms_tokh(spark, texts)).select(
+        F.lit(bid).cast("bigint").alias("batch_id"), _win(bid // 2),
+        "r", "bucket", "cnt",
+    ).write.mode("append").parquet(path)
+
+
+def _cms_state(spark, path: str) -> dict:
+    return {
+        (r.r, r.bucket): r.cnt
+        for r in sk.read_cms_counters_windowed(spark, path).collect()
+    }
+
+
 def _build_cms_log(spark, path: str) -> dict:
     """Append 3 micro-batch counter generations (what the maintainer's
     foreachBatch does), return the single-pass batch oracle — q108's
@@ -138,9 +174,7 @@ def _build_cms_log(spark, path: str) -> dict:
     from cosmo_spark.operators.sketches import cms_counters
 
     for bid, texts in enumerate(_CMS_BATCHES):
-        cms_counters(_cms_tokh(spark, texts)).select(
-            F.lit(bid).cast("bigint").alias("batch_id"), "r", "bucket", "cnt"
-        ).write.mode("append").parquet(path)
+        _cms_append(spark, path, bid, texts)
     batch = cms_counters(
         _cms_tokh(spark, [t for b in _CMS_BATCHES for t in b])
     )
@@ -152,21 +186,17 @@ def test_cms_rotation_crash_sweep(spark, tmp_path):
     expected = _build_cms_log(spark, pristine)
 
     def read_state(path):
-        return {
-            (r.r, r.bucket): r.cnt
-            for r in sk.read_cms_counters(spark, path).collect()
-        }
+        return _cms_state(spark, path)
 
     assert read_state(pristine) == expected
-    n_before = spark.read.schema(sk.CMS_SCHEMA).parquet(pristine).count()
-    _sweep(tmp_path, pristine, read_state,
-           lambda p: sk.compact_cms_counters(spark, p))
+    n_before = spark.read.schema(sk.CMSW_SCHEMA).parquet(pristine).count()
+    _sweep(tmp_path, pristine, read_state, _compact(spark, "cms"))
     # happy path: all COMMITTED batches fold into the sentinel; the
     # newest batch keeps its identity (it is the one a checkpoint can
     # replay — see test_cms_compaction_preserves_newest_batch_dedupe)
-    sk.compact_cms_counters(spark, pristine)
+    _compact(spark, "cms")(pristine)
     assert read_state(pristine) == expected
-    log = spark.read.schema(sk.CMS_SCHEMA).parquet(pristine)
+    log = spark.read.schema(sk.CMSW_SCHEMA).parquet(pristine)
     ids = {r.batch_id for r in log.select("batch_id").distinct().collect()}
     assert ids == {-1, len(_CMS_BATCHES) - 1}
     assert log.count() < n_before
@@ -178,20 +208,15 @@ def test_cms_compaction_preserves_newest_batch_dedupe(spark, tmp_path):
     replayed rows would no longer dedupe and every count from that batch
     would double.  Compact, then replay the newest batch — counts must
     not change."""
-    from cosmo_spark.operators.sketches import cms_counters
-
     path = str(tmp_path / "log")
     expected = _build_cms_log(spark, path)
-    sk.compact_cms_counters(spark, path)
+    _compact(spark, "cms")(path)
     # the stream restarts and replays batch 2 verbatim
     last = len(_CMS_BATCHES) - 1
-    cms_counters(_cms_tokh(spark, _CMS_BATCHES[last])).select(
-        F.lit(last).cast("bigint").alias("batch_id"), "r", "bucket", "cnt"
-    ).write.mode("append").parquet(path)
-    assert {
-        (r.r, r.bucket): r.cnt
-        for r in sk.read_cms_counters(spark, path).collect()
-    } == expected, "replayed newest batch must dedupe after compaction"
+    _cms_append(spark, path, last, _CMS_BATCHES[last])
+    assert _cms_state(spark, path) == expected, (
+        "replayed newest batch must dedupe after compaction"
+    )
 
 
 def test_cms_double_compaction_keeps_sentinel_sound(spark, tmp_path):
@@ -200,20 +225,17 @@ def test_cms_double_compaction_keeps_sentinel_sound(spark, tmp_path):
     from cosmo_spark.operators.sketches import cms_counters
 
     path = str(tmp_path / "log")
-    expected = _build_cms_log(spark, path)
-    sk.compact_cms_counters(spark, path)
+    _build_cms_log(spark, path)
+    _compact(spark, "cms")(path)
     extra = "brand new tokens arrive"
-    cms_counters(_cms_tokh(spark, [extra])).select(
-        F.lit(3).cast("bigint").alias("batch_id"), "r", "bucket", "cnt"
-    ).write.mode("append").parquet(path)
-    sk.compact_cms_counters(spark, path)
+    _cms_append(spark, path, 3, [extra])
+    _compact(spark, "cms")(path)
     batch = cms_counters(
         _cms_tokh(spark, [t for b in _CMS_BATCHES for t in b] + [extra])
     )
-    assert {
-        (r.r, r.bucket): r.cnt
-        for r in sk.read_cms_counters(spark, path).collect()
-    } == {(r.r, r.bucket): r.cnt for r in batch.collect()}
+    assert _cms_state(spark, path) == {
+        (r.r, r.bucket): r.cnt for r in batch.collect()
+    }
 
 
 # --------------------------------------------------------------------- #
@@ -228,16 +250,18 @@ def test_hll_rotation_crash_sweep(spark, tmp_path):
         [("web", f"doc {i}") for i in range(30)],
         [("web", f"doc {i}") for i in range(15, 45)] + [("wiki", "alpha")],
     ]
-    for b in batches:
+    for i, b in enumerate(batches):
         hll_registers(
-            spark.createDataFrame(b, "key STRING, text STRING"),
-            ["key"], "text",
-        ).write.mode("append").parquet(pristine)
+            spark.createDataFrame(b, "key STRING, text STRING")
+            .select("key", _win(i), "text"),
+            ["key", "win"], "text",
+        ).select("key", "win", "bucket", "rho") \
+            .write.mode("append").parquet(pristine)
 
     def read_state(path):
         return {
             (r.key, r.bucket): r.rho
-            for r in sk.read_hll_registers(spark, path).collect()
+            for r in sk.read_hll_registers_windowed(spark, path).collect()
         }
 
     batch = hll_registers(
@@ -249,35 +273,37 @@ def test_hll_rotation_crash_sweep(spark, tmp_path):
     assert read_state(pristine) == {
         (r.key, r.bucket): r.rho for r in batch.collect()
     }
-    _sweep(tmp_path, pristine, read_state,
-           lambda p: sk.compact_hll_registers(spark, p))
+    _sweep(tmp_path, pristine, read_state, _compact(spark, "hll"))
 
 
 def test_kmv_rotation_crash_sweep(spark, tmp_path):
-    from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import kmv_k_smallest
 
     pristine = str(tmp_path / "pristine")
     batches = [
-        [("web", " ".join(f"tok{i}" for i in range(0, 120)))],
-        [("web", " ".join(f"tok{i}" for i in range(80, 200))),
-         ("wiki", "alpha beta gamma")],
+        [("web", f"tok{i}") for i in range(0, 120)],
+        [("web", f"tok{i}") for i in range(80, 200)]
+        + [("wiki", v) for v in ("alpha", "beta", "gamma")],
     ]
 
     def hashes(rows):
         return (
             spark.createDataFrame(rows, "key STRING, text STRING")
-            .select("key", F.explode(tokenize(F.col("text"))).alias("t"))
-            .select("key", poly_hash(F.col("t")).alias("h"))
+            .select("key", poly_hash(F.col("text")).alias("h"))
             .distinct()
         )
 
-    for b in batches:
-        kmv_k_smallest(hashes(b), ["key"]).write.mode("append") \
-            .parquet(pristine)
+    for i, b in enumerate(batches):
+        kmv_k_smallest(
+            hashes(b).select("key", _win(i), "h"), ["key", "win"]
+        ).write.mode("append").parquet(pristine)
 
     def read_state(path):
-        return {(r.key, r.h) for r in sk.read_kmv_values(spark, path).collect()}
+        return {
+            (r.key, r.h)
+            for r in sk.read_kmv_values_windowed(spark, path).collect()
+        }
 
     assert read_state(pristine) == {
         (r.key, r.h)
@@ -285,8 +311,7 @@ def test_kmv_rotation_crash_sweep(spark, tmp_path):
             hashes([d for b in batches for d in b]), ["key"]
         ).collect()
     }
-    _sweep(tmp_path, pristine, read_state,
-           lambda p: sk.compact_kmv_values(spark, p))
+    _sweep(tmp_path, pristine, read_state, _compact(spark, "kmv"))
 
 
 # --------------------------------------------------------------------- #
@@ -308,14 +333,17 @@ def test_cms_stream_restart_after_committed_phase_crash(spark, tmp_path):
 
     def write_batch(name, texts):
         with open(src / name, "w") as f:
-            for t in texts:
-                f.write(json.dumps({"source": "s", "text": t}) + "\n")
+            for i, t in enumerate(texts):
+                f.write(json.dumps({
+                    "source": "s", "text": t,
+                    "ts": WINS[i % len(WINS)].isoformat(),
+                }) + "\n")
 
     def run_maintainer():
         stream = spark.readStream.schema(
-            "source STRING, text STRING"
+            "source STRING, text STRING, ts TIMESTAMP"
         ).json(str(src))
-        sk.stream_cms_counters(stream, "text", ctr, ckpt) \
+        sk.stream_cms_counters_windowed(stream, "text", "ts", ctr, ckpt) \
             .awaitTermination(120)
 
     write_batch("b1.json", b1)
@@ -328,7 +356,7 @@ def test_cms_stream_restart_after_committed_phase_crash(spark, tmp_path):
     restore, state = _patched("_fs_remove", 2)
     try:
         with pytest.raises(_Kill):
-            sk.compact_cms_counters(spark, ctr)
+            _compact(spark, "cms")(ctr)
     finally:
         restore()
     assert state["fired"]
@@ -343,17 +371,13 @@ def test_cms_stream_restart_after_committed_phase_crash(spark, tmp_path):
 
     batch = cms_counters(_cms_tokh(spark, b1 + b2))
     expected = {(r.r, r.bucket): r.cnt for r in batch.collect()}
-    assert {
-        (r.r, r.bucket): r.cnt
-        for r in sk.read_cms_counters(spark, ctr).collect()
-    } == expected, "committed-phase crash must not double-count"
+    assert _cms_state(spark, ctr) == expected, (
+        "committed-phase crash must not double-count"
+    )
 
     # the next compaction (or explicit recovery) heals the log
-    sk.compact_cms_counters(spark, ctr)
-    assert {
-        (r.r, r.bucket): r.cnt
-        for r in sk.read_cms_counters(spark, ctr).collect()
-    } == expected
+    _compact(spark, "cms")(ctr)
+    assert _cms_state(spark, ctr) == expected
     assert _log_clean(ctr)
 
 
@@ -378,18 +402,17 @@ def test_hdr_rotation_crash_sweep(spark, tmp_path):
             .select(F.expr(hdr_bucket_spark_sql("mic")).alias("bucket"))
             .groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
             .select(F.lit(bid).cast("bigint").alias("batch_id"),
-                    F.lit("s").alias("key"), "bucket", "cnt")
+                    F.lit("s").alias("key"), _win(bid), "bucket", "cnt")
             .write.mode("append").parquet(pristine)
         )
 
     def read_state(path):
         return {
             (r.key, r.bucket): r.cnt
-            for r in sk.read_hdr_buckets(spark, path).collect()
+            for r in sk.read_hdr_buckets_windowed(spark, path).collect()
         }
 
-    _sweep(tmp_path, pristine, read_state,
-           lambda p: sk.compact_hdr_buckets(spark, p))
+    _sweep(tmp_path, pristine, read_state, _compact(spark, "hdr"))
 
 
 def test_reader_racing_live_rotations_never_sees_mixed_generation(
@@ -397,15 +420,13 @@ def test_reader_racing_live_rotations_never_sees_mixed_generation(
 ):
     """Stress the manifest-filtered reader against a LIVE rotator: a
     loop of compactions in a background thread while the foreground
-    reader hammers read_cms_counters.  The contract is CONSISTENT-OR-
+    reader hammers read_cms_counters_windowed.  The contract is CONSISTENT-OR-
     LOUD: every read that RETURNS must carry exactly the merged counter
     state (one generation — never a double-count or partial view; the
     r8 ABA gate), while a read whose task execution overlaps the
     post-commit cleanup may fail loudly with FILE_NOT_EXIST and is
     retried — the documented snapshot-retention trade."""
     import threading
-
-    from cosmo_spark.operators.sketches import cms_counters
 
     path = str(tmp_path / "log")
     expected = _build_cms_log(spark, path)
@@ -416,13 +437,10 @@ def test_reader_racing_live_rotations_never_sees_mixed_generation(
     def rotate_forever():
         try:
             while not stop.is_set():
-                sk.compact_cms_counters(spark, path)
+                _compact(spark, "cms")(path)
                 # keep the log multi-file so every rotation has real work
-                cms_counters(_cms_tokh(spark, _CMS_BATCHES[-1])).select(
-                    F.lit(len(_CMS_BATCHES) - 1).cast("bigint")
-                     .alias("batch_id"),
-                    "r", "bucket", "cnt",
-                ).write.mode("append").parquet(path)
+                last = len(_CMS_BATCHES) - 1
+                _cms_append(spark, path, last, _CMS_BATCHES[last])
         except BaseException as e:  # surfaced in the main thread
             errors.append(e)
 
@@ -432,10 +450,7 @@ def test_reader_racing_live_rotations_never_sees_mixed_generation(
     try:
         while ok < 10 and ok + loud < 60:
             try:
-                got = {
-                    (r.r, r.bucket): r.cnt
-                    for r in sk.read_cms_counters(spark, path).collect()
-                }
+                got = _cms_state(spark, path)
             except Exception as e:  # loud-and-retryable, never silent
                 assert "FILE_NOT_EXIST" in str(e) or "does not exist" in str(e), e
                 loud += 1
@@ -448,8 +463,5 @@ def test_reader_racing_live_rotations_never_sees_mixed_generation(
     assert not errors, errors
     assert ok >= 10, f"only {ok} consistent reads ({loud} loud retries)"
     # settle: one final compaction and the state is still exact
-    sk.compact_cms_counters(spark, path)
-    assert {
-        (r.r, r.bucket): r.cnt
-        for r in sk.read_cms_counters(spark, path).collect()
-    } == expected
+    _compact(spark, "cms")(path)
+    assert _cms_state(spark, path) == expected

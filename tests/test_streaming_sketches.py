@@ -1,42 +1,56 @@
-"""Streaming HLL register maintenance: the incrementally-maintained state
-must be BIT-IDENTICAL to a from-scratch batch computation over the same
-documents (the q105 stream-twin discipline applied to q107's machinery),
-across micro-batches, restarts, retries (idempotent max-merge), and
-compaction."""
+"""Streaming sketch maintenance: the incrementally-maintained state must
+be BIT-IDENTICAL to a from-scratch batch computation over the same
+documents (the q105 stream-twin discipline applied to q107/q108/q110/q143's
+machinery), across micro-batches, restarts, retries (idempotent max /
+union, deduped sums), and compaction.
+
+Every log is bucketed by event-time window; the all-time sketch is the
+windowed read with both horizon sides open, and it must equal the batch
+sketch over every row that has an event time (the rows here are spread
+over three days, so that read merges across windows).  Compaction is
+``expire_windows`` with a horizon at the earliest window: it drops
+nothing and rewrites the log to its merged minimum."""
 
 from __future__ import annotations
 
 import json
+from datetime import datetime
 
 import pytest
 
-from cosmo_spark.streaming.sketches import (
-    compact_hll_registers,
-    hll_distinct_estimates,
-    read_hll_registers,
-    stream_hll_registers,
-)
+from cosmo_spark.streaming import sketches as sk
+
+#: the rows' days; a horizon AT the first one expires nothing
+DAYS = ("2024-01-01T08:00:00", "2024-01-02T09:00:00", "2024-01-03T10:00:00")
+FIRST_DAY = datetime(2024, 1, 1)
+
+
+def _ts(i: int) -> str:
+    return DAYS[i % len(DAYS)]
 
 
 def _write_batch(src, name, docs):
     with open(src / name, "w") as f:
-        for key, text in docs:
-            f.write(json.dumps({"source": key, "text": text}) + "\n")
+        for i, (key, text) in enumerate(docs):
+            f.write(json.dumps(
+                {"source": key, "text": text, "ts": _ts(i)}
+            ) + "\n")
+
+
+def _stream(spark, src):
+    return spark.readStream.schema(
+        "source STRING, text STRING, ts TIMESTAMP"
+    ).json(str(src))
 
 
 def _run(spark, src, ckpt, regs):
-    stream = spark.readStream.schema("source STRING, text STRING").json(
-        str(src)
-    )
-    q = stream_hll_registers(
-        stream, "source", "text", str(regs), str(ckpt)
+    q = sk.stream_hll_registers_windowed(
+        _stream(spark, src), "source", "text", "ts", str(regs), str(ckpt)
     )
     assert q.awaitTermination(120)
 
 
 def test_stream_registers_equal_batch_recompute(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     from cosmo_spark.operators.sketches import hll_estimate, hll_registers
 
     src = tmp_path / "in"
@@ -62,50 +76,50 @@ def test_stream_registers_equal_batch_recompute(spark, tmp_path):
         (r.key, r.bucket): r.rho
         for r in hll_registers(all_docs, ["key"], "text").collect()
     }
-    got = {
-        (r.key, r.bucket): r.rho
-        for r in read_hll_registers(spark, str(regs)).collect()
-    }
-    assert got == expected, "incremental merge must equal batch recompute"
+
+    def got():
+        return {
+            (r.key, r.bucket): r.rho
+            for r in sk.read_hll_registers_windowed(spark, str(regs))
+            .collect()
+        }
+
+    assert got() == expected, "incremental merge must equal batch recompute"
 
     # dashboard estimates: shared estimator, small-range correction live —
     # wiki has 2 distinct texts, so its corrected estimate is ~exact
-    ests = {
-        r.key: r.est
-        for r in hll_distinct_estimates(spark, str(regs)).collect()
-    }
+    def ests():
+        return {
+            r.key: r.est
+            for r in sk.hll_distinct_estimates_windowed(spark, str(regs))
+            .collect()
+        }
+
     batch_ests = {
         r.key: r.est
         for r in hll_estimate(
             hll_registers(all_docs, ["key"], "text"), ["key"]
         ).collect()
     }
-    assert ests == batch_ests
-    assert ests["wiki"] == pytest.approx(2.0, rel=0.15)
+    streamed = ests()
+    assert streamed == batch_ests
+    assert streamed["wiki"] == pytest.approx(2.0, rel=0.15)
 
     # retry idempotence: re-appending a batch's registers (what a crashed
     # foreachBatch retry does) must not change the merged state
     spark.read.parquet(str(regs)).limit(50).write.mode("append").parquet(
         str(regs)
     )
-    assert {
-        (r.key, r.bucket): r.rho
-        for r in read_hll_registers(spark, str(regs)).collect()
-    } == expected
+    assert got() == expected
 
-    # compaction: same merged state, log shrunk to <= keys x m rows
+    # compaction: same merged state, log shrunk to <= keys x days x m rows
     n_before = spark.read.parquet(str(regs)).count()
-    compact_hll_registers(spark, str(regs))
-    assert {
-        (r.key, r.bucket): r.rho
-        for r in read_hll_registers(spark, str(regs)).collect()
-    } == expected
-    assert spark.read.parquet(str(regs)).count() <= min(n_before, 2 * 256)
-    ests2 = {
-        r.key: r.est
-        for r in hll_distinct_estimates(spark, str(regs)).collect()
-    }
-    assert ests2 == batch_ests
+    sk.expire_windows(spark, str(regs), "hll", older_than=FIRST_DAY)
+    assert got() == expected
+    assert spark.read.parquet(str(regs)).count() <= min(
+        n_before, 2 * len(DAYS) * 256
+    )
+    assert ests() == batch_ests
 
 
 def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
@@ -116,12 +130,8 @@ def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.operators.sketches import cms_probe_rows
     from cosmo_spark.queries.misc import _CMS_P, _CMS_ROWS, _CMS_W
-    from cosmo_spark.streaming.sketches import (
-        cms_frequency_estimates,
-        read_cms_counters,
-        stream_cms_counters,
-    )
 
     src = tmp_path / "in"
     src.mkdir()
@@ -131,10 +141,9 @@ def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
     _write_batch(src, "b1.json", b1)
 
     def run():
-        stream = spark.readStream.schema("source STRING, text STRING").json(
-            str(src)
+        q = sk.stream_cms_counters_windowed(
+            _stream(spark, src), "text", "ts", str(ctr), str(ckpt)
         )
-        q = stream_cms_counters(stream, "text", str(ctr), str(ckpt))
         assert q.awaitTermination(120)
 
     run()
@@ -159,19 +168,29 @@ def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
             F.col("rb.r").alias("r"), F.col("rb.bucket").alias("bucket")
         ).agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
-    got = {
-        (r.r, r.bucket): r.cnt
-        for r in read_cms_counters(spark, str(ctr)).collect()
-    }
-    assert got == expected
+
+    def got():
+        return {
+            (r.r, r.bucket): r.cnt
+            for r in sk.read_cms_counters_windowed(spark, str(ctr)).collect()
+        }
+
+    assert got() == expected
 
     # 'the' appears 3x, 'fox' 2x, 'dog' 1x, 'cat' never (min-over-rows
-    # never underestimates; on this tiny stream collisions are absent)
+    # never underestimates; on this tiny stream collisions are absent) —
+    # q108's probe estimator over the streaming-maintained counters
+    toks = spark.createDataFrame(
+        [(t,) for t in ("the", "fox", "dog", "cat")], "token STRING"
+    ).select("token", poly_hash(F.col("token")).alias("th"))
     ests = {
         r.token: r.cms_est
-        for r in cms_frequency_estimates(
-            spark, str(ctr), ["the", "fox", "dog", "cat"]
-        ).collect()
+        for r in cms_probe_rows(toks, ["token"])
+        .join(F.broadcast(sk.read_cms_counters_windowed(spark, str(ctr))),
+              ["r", "bucket"], "left")
+        .groupBy("token")
+        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_est"))
+        .collect()
     }
     assert ests == {"the": 3, "fox": 2, "dog": 1, "cat": 0}
 
@@ -179,11 +198,7 @@ def test_stream_cms_counters_equal_batch_and_dedupe_retries(spark, tmp_path):
     # merged counters must not change (dedupe-then-sum)
     log = spark.read.parquet(str(ctr))
     log.filter(F.col("batch_id") == 0).write.mode("append").parquet(str(ctr))
-    got2 = {
-        (r.r, r.bucket): r.cnt
-        for r in read_cms_counters(spark, str(ctr)).collect()
-    }
-    assert got2 == expected, "retried appends must dedupe, not double-count"
+    assert got() == expected, "retried appends must dedupe, not double-count"
 
 
 def test_stream_kmv_values_equal_batch_and_survive_compaction(spark, tmp_path):
@@ -193,93 +208,93 @@ def test_stream_kmv_values_equal_batch_and_survive_compaction(spark, tmp_path):
     HLL's max); compaction preserves the merged sketch and estimates."""
     from pyspark.sql import functions as F
 
-    from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import (
         KMV_K,
         kmv_estimate,
         kmv_k_smallest,
-    )
-    from cosmo_spark.streaming.sketches import (
-        compact_kmv_values,
-        kmv_distinct_estimates,
-        read_kmv_values,
-        stream_kmv_values,
     )
 
     src = tmp_path / "in"
     src.mkdir()
     ckpt, vals = tmp_path / "ck", tmp_path / "vals"
 
-    # web: 300 distinct tokens across two overlapping batches (beyond
-    # k=64, exercising the estimator branch); wiki: 3 (exact branch)
-    b1 = [("web", " ".join(f"tok{i}" for i in range(0, 180)))]
-    b2 = [
-        ("web", " ".join(f"tok{i}" for i in range(120, 300))),
-        ("wiki", "alpha beta"),
+    # web: 300 distinct values across two overlapping batches (beyond
+    # k=64, exercising the estimator branch); wiki: 3 (exact branch).
+    # Values are hashed whole.
+    b1 = [("web", f"tok{i}") for i in range(0, 180)]
+    b2 = [("web", f"tok{i}") for i in range(120, 300)] + [
+        ("wiki", "alpha"),
+        ("wiki", "beta"),
         ("wiki", None),
-        ("wiki", "alpha gamma"),
+        ("wiki", "alpha"),
+        ("wiki", "gamma"),
     ]
-    _write_batch(src, "b1.json", b1)
-    stream = spark.readStream.schema("source STRING, text STRING").json(str(src))
-    assert stream_kmv_values(
-        stream, "source", "text", str(vals), str(ckpt)
-    ).awaitTermination(120)
-    _write_batch(src, "b2.json", b2)
-    stream = spark.readStream.schema("source STRING, text STRING").json(str(src))
-    assert stream_kmv_values(
-        stream, "source", "text", str(vals), str(ckpt)
-    ).awaitTermination(120)
 
-    all_docs = spark.createDataFrame(
-        b1 + b2, "key STRING, text STRING"
-    ).filter(F.col("text").isNotNull())
+    def run():
+        assert sk.stream_kmv_values_windowed(
+            _stream(spark, src), "source", "text", "ts", str(vals), str(ckpt)
+        ).awaitTermination(120)
+
+    _write_batch(src, "b1.json", b1)
+    run()
+    _write_batch(src, "b2.json", b2)
+    run()
+
     hs = (
-        all_docs.select("key", F.explode(tokenize(F.col("text"))).alias("t"))
-        .select("key", poly_hash(F.col("t")).alias("h"))
+        spark.createDataFrame(b1 + b2, "key STRING, text STRING")
+        .filter(F.col("text").isNotNull())
+        .select("key", poly_hash(F.col("text")).alias("h"))
         .distinct()
     )
     expected = {
         (r.key, r.h) for r in kmv_k_smallest(hs, ["key"]).collect()
     }
-    got = {(r.key, r.h) for r in read_kmv_values(spark, str(vals)).collect()}
-    assert got == expected, "incremental union must equal batch build"
 
-    ests = {
-        r.key: (r.n_sk, r.est)
-        for r in kmv_distinct_estimates(spark, str(vals)).collect()
-    }
+    def got():
+        return {
+            (r.key, r.h)
+            for r in sk.read_kmv_values_windowed(spark, str(vals)).collect()
+        }
+
+    def ests():
+        return {
+            r.key: (r.n_sk, r.est)
+            for r in kmv_estimate(
+                sk.read_kmv_values_windowed(spark, str(vals)), ["key"]
+            ).collect()
+        }
+
+    assert got() == expected, "incremental union must equal batch build"
+
     batch_ests = {
         r.key: (r.n_sk, r.est)
         for r in kmv_estimate(kmv_k_smallest(hs, ["key"]), ["key"]).collect()
     }
-    assert ests == batch_ests
-    assert ests["wiki"] == (3, 3.0)          # exact branch below k
-    assert ests["web"][0] == KMV_K           # estimator branch at k
+    streamed = ests()
+    assert streamed == batch_ests
+    assert streamed["wiki"] == (3, 3.0)            # exact branch below k
+    assert streamed["web"][0] == KMV_K             # estimator branch at k
     # accuracy is loose here by design: sequential "tokN" strings are not
     # uniform under the 31-base poly hash (estimator quality is certified
     # by q110's oracle on corpus text); this guards the BRANCH, not the
     # error bound
-    assert ests["web"][1] > 2 * KMV_K
+    assert streamed["web"][1] > 2 * KMV_K
 
     # retry idempotence: re-appending sketch rows changes nothing
     spark.read.parquet(str(vals)).limit(40).write.mode("append").parquet(
         str(vals)
     )
-    assert {
-        (r.key, r.h) for r in read_kmv_values(spark, str(vals)).collect()
-    } == expected
+    assert got() == expected
 
-    # compaction: merged state identical, log bounded by keys x k
+    # compaction: merged state identical, log bounded by keys x days x k
     n_before = spark.read.parquet(str(vals)).count()
-    compact_kmv_values(spark, str(vals))
-    assert {
-        (r.key, r.h) for r in read_kmv_values(spark, str(vals)).collect()
-    } == expected
-    assert spark.read.parquet(str(vals)).count() <= min(n_before, 2 * KMV_K)
-    assert {
-        r.key: (r.n_sk, r.est)
-        for r in kmv_distinct_estimates(spark, str(vals)).collect()
-    } == batch_ests
+    sk.expire_windows(spark, str(vals), "kmv", older_than=FIRST_DAY)
+    assert got() == expected
+    assert spark.read.parquet(str(vals)).count() <= min(
+        n_before, 2 * len(DAYS) * KMV_K
+    )
+    assert ests() == batch_ests
 
 
 def test_kmv_estimate_numerator_follows_k(spark):
@@ -316,12 +331,6 @@ def test_stream_hdr_buckets_equal_batch_and_quantile_band(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from cosmo_spark.operators.sketches import hdr_bucket_spark_sql
-    from cosmo_spark.streaming.sketches import (
-        compact_hdr_buckets,
-        hdr_quantile_estimates,
-        read_hdr_buckets,
-        stream_hdr_buckets,
-    )
 
     src = tmp_path / "in"
     src.mkdir()
@@ -333,15 +342,17 @@ def test_stream_hdr_buckets_equal_batch_and_quantile_band(spark, tmp_path):
 
     def write_batch(name, rows):
         with open(src / name, "w") as f:
-            for k, v in rows:
-                f.write(json.dumps({"source": k, "value": v}) + "\n")
+            for i, (k, v) in enumerate(rows):
+                f.write(json.dumps(
+                    {"source": k, "value": v, "ts": _ts(i)}
+                ) + "\n")
 
     def run():
-        stream = spark.readStream.schema("source STRING, value DOUBLE").json(
-            str(src)
-        )
-        assert stream_hdr_buckets(
-            stream, "source", "value", log, ckpt
+        stream = spark.readStream.schema(
+            "source STRING, value DOUBLE, ts TIMESTAMP"
+        ).json(str(src))
+        assert sk.stream_hdr_buckets_windowed(
+            stream, "source", "value", "ts", log, ckpt
         ).awaitTermination(120)
 
     write_batch("b1.json", b1)
@@ -361,28 +372,24 @@ def test_stream_hdr_buckets_equal_batch_and_quantile_band(spark, tmp_path):
         .groupBy("key", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
     )
     expected = {(r.key, r.bucket): r.cnt for r in batch.collect()}
-    got = {
-        (r.key, r.bucket): r.cnt
-        for r in read_hdr_buckets(spark, log).collect()
-    }
-    assert got == expected, "incremental counts must equal batch build"
+    def got():
+        return {
+            (r.key, r.bucket): r.cnt
+            for r in sk.read_hdr_buckets_windowed(spark, log).collect()
+        }
+
+    assert got() == expected, "incremental counts must equal batch build"
 
     # retried appends (same batch_id) dedupe, never double-count
     raw = spark.read.parquet(log)
     raw.filter(F.col("batch_id") == 0).write.mode("append").parquet(log)
-    assert {
-        (r.key, r.bucket): r.cnt
-        for r in read_hdr_buckets(spark, log).collect()
-    } == expected
+    assert got() == expected
 
     # compaction through the crash-atomic rotation: state preserved;
     # committed batches fold into the sentinel, the newest keeps its
     # identity for replay dedupe (review r8)
-    compact_hdr_buckets(spark, log)
-    assert {
-        (r.key, r.bucket): r.cnt
-        for r in read_hdr_buckets(spark, log).collect()
-    } == expected
+    sk.expire_windows(spark, log, "hdr", older_than=FIRST_DAY)
+    assert got() == expected
     assert {r.batch_id for r in
             spark.read.parquet(log).select("batch_id").distinct().collect()} \
         == {-1, 1}
@@ -393,7 +400,7 @@ def test_stream_hdr_buckets_equal_batch_and_quantile_band(spark, tmp_path):
     n = len(svals)
     ests = {
         (r.key, r.quantile): r.est_value
-        for r in hdr_quantile_estimates(spark, log).collect()
+        for r in sk.hdr_quantile_estimates_windowed(spark, log).collect()
     }
     for q in (50, 90, 99):
         true = next(v for i, v in enumerate(svals, 1) if 100 * i >= q * n)

@@ -1,4 +1,4 @@
-"""Windowed sketch registers (review r7 #6): event-time-bucketed HLL/CMS/KMV
+"""Windowed sketch registers: event-time-bucketed HLL/CMS/KMV/HDR
 state so horizon questions ("distinct over the last 30 days") are answerable
 and old buckets AGE OUT of at-rest state — bounded sketches on an unbounded
 stream.  Gates: (a) an in-horizon read is bit-identical to a from-scratch
@@ -135,7 +135,7 @@ def test_cms_windowed_horizon_and_eviction(spark, tmp_path):
 
 
 def test_kmv_windowed_horizon_and_eviction(spark, tmp_path):
-    from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import kmv_k_smallest
 
     vals, ckpt = str(tmp_path / "vals"), str(tmp_path / "ck")
@@ -146,8 +146,7 @@ def test_kmv_windowed_horizon_and_eviction(spark, tmp_path):
     def batch_sketch(rows):
         hs = (
             _docs(spark, rows).filter(F.col("text").isNotNull())
-            .select("key", F.explode(tokenize(F.col("text"))).alias("t"))
-            .select("key", poly_hash(F.col("t")).alias("h"))
+            .select("key", poly_hash(F.col("text")).alias("h"))
             .distinct()
         )
         return {(r.key, r.h) for r in kmv_k_smallest(hs, ["key"]).collect()}
@@ -465,7 +464,7 @@ def test_cms_rebuild_window_from_quarantine(spark, tmp_path):
 
 
 def test_kmv_rebuild_window_from_quarantine(spark, tmp_path):
-    from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import kmv_k_smallest
 
     log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
@@ -479,8 +478,7 @@ def test_kmv_rebuild_window_from_quarantine(spark, tmp_path):
     def batch(rows):
         hs = (
             _docs(spark, rows).filter(F.col("text").isNotNull())
-            .select("key", F.explode(tokenize(F.col("text"))).alias("t"))
-            .select("key", poly_hash(F.col("t")).alias("h"))
+            .select("key", poly_hash(F.col("text")).alias("h"))
             .distinct()
         )
         return sorted(
@@ -694,7 +692,7 @@ def test_cms_rebuild_log_from_quarantine(spark, tmp_path):
 
 
 def test_kmv_rebuild_log_from_quarantine(spark, tmp_path):
-    from cosmo_spark.functions.text import poly_hash, tokenize
+    from cosmo_spark.functions.text import poly_hash
     from cosmo_spark.operators.sketches import kmv_k_smallest
 
     log, ckpt = str(tmp_path / "log"), str(tmp_path / "ck")
@@ -708,8 +706,7 @@ def test_kmv_rebuild_log_from_quarantine(spark, tmp_path):
     def batch(rows):
         hs = (
             _docs(spark, rows).filter(F.col("text").isNotNull())
-            .select("key", F.explode(tokenize(F.col("text"))).alias("t"))
-            .select("key", poly_hash(F.col("t")).alias("h"))
+            .select("key", poly_hash(F.col("text")).alias("h"))
             .distinct()
         )
         return sorted(

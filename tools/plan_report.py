@@ -2,7 +2,13 @@
 
 For each query: exchange (shuffle) count, broadcast joins, whether scans have
 pushed filters, sort-merge joins, and codegen coverage — the at-a-glance
-evidence that the declarative plans compile to the intended shapes.
+evidence that the declarative plans compile to the intended shapes.  The
+counts sum over the returned frame and every frame the query
+``localCheckpoint``ed while building it (``plans.explain.query_frames``):
+a checkpoint runs its stages as an eager job the returned plan no longer
+shows.
+
+    python tools/plan_report.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -60,7 +66,7 @@ EXTRA_NOTES = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    from cosmo_spark.plans.explain import physical_plan
+    from cosmo_spark.plans.explain import physical_plan, query_frames
     from cosmo_spark.queries import all_queries
     from cosmo_spark.session import get_spark
 
@@ -73,20 +79,31 @@ def main() -> None:
         f"Generated by `python tools/plan_report.py` over `{sf_dir}`.",
         "Exchanges = shuffle boundaries in the initial plan (AQE may coalesce",
         "further at runtime). Pushed = every parquet scan carries PushedFilters.",
+        "Counts sum over the returned frame and every frame the query",
+        "localCheckpointed on the way (those stages run as eager jobs).",
         "",
         "| query | exchanges | broadcast joins | SMJ | pushed filters | notes |",
         "|---|---|---|---|---|---|",
     ]
     for name, q in all_queries().items():
         try:
-            df = q.spark_fn(spark, sf_dir)
-            plan = physical_plan(df)
+            df, *checkpointed = query_frames(lambda: q.spark_fn(spark, sf_dir))
+            # a checkpointed frame already ran, so its own plan prints AQE's
+            # final AND initial trees; a no-op select plans it afresh
+            plans = [physical_plan(df)] + [
+                physical_plan(f.select("*")) for f in checkpointed
+            ]
         except Exception as e:  # pragma: no cover
             lines.append(f"| {name} | — | — | — | — | ERROR {type(e).__name__} |")
             continue
-        n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
-        n_bc = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan.split("== Initial Plan ==")[0] or plan))
-        n_smj = plan.count("SortMergeJoin")
+        n_ex = sum(len(re.findall(r"\(\d+\) Exchange", p)) for p in plans)
+        n_bc = sum(
+            len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin",
+                           p.split("== Initial Plan ==")[0] or p))
+            for p in plans
+        )
+        n_smj = sum(p.count("SortMergeJoin") for p in plans)
+        plan = "\n".join(plans)
         scans = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         pushed = "yes" if scans and all(s.strip() for s in scans) else ("n/a" if not scans else "partial")
         notes = []
@@ -101,7 +118,7 @@ def main() -> None:
         )
     out = Path(__file__).resolve().parent.parent / "docs" / "PLANS.md"
     out.write_text("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(lines) - 8} queries)")
+    print(f"wrote {out} ({len(lines) - 10} queries)")
 
 
 if __name__ == "__main__":
